@@ -555,7 +555,7 @@ def dedup_keep_list(df: DataFrame, pairs: DataFrame,
     100 TB input; the labeling join back onto ``df`` is one
     broadcast-or-shuffle hash join.
     """
-    from graphscope_spark.runtime.truncate import Truncator, truncate
+    from graphscope_spark.runtime.superstep import Truncator, truncate
 
     e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     t = Truncator()

@@ -41,7 +41,7 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.bridges import _bfs_forest
-from graphscope_spark.runtime.truncate import Truncator, truncate
+from graphscope_spark.runtime.superstep import Truncator, truncate
 
 
 def _tree_with_pre(graph: LinkGraph, t: Truncator):

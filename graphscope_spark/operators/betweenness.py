@@ -28,7 +28,7 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.traversal import resolve_sources
-from graphscope_spark.runtime.truncate import Truncator
+from graphscope_spark.runtime.superstep import Truncator
 
 
 def betweenness_centrality(graph: LinkGraph,

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.wcc import wcc
-from graphscope_spark.runtime.truncate import Truncator
+from graphscope_spark.runtime.superstep import Truncator
 
 
 def _bfs_forest(graph: LinkGraph, t: Truncator) -> tuple[DataFrame, int]:

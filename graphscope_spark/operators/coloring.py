@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.traversal import sample_pivots
 from graphscope_spark.operators.triangles import oriented_edges
-from graphscope_spark.runtime.truncate import Truncator
+from graphscope_spark.runtime.superstep import Truncator
 
 
 def color(graph: LinkGraph, max_rounds: int = 10_000) -> DataFrame:

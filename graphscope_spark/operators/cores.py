@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.truncate import Truncator, free_truncated, truncate
+from graphscope_spark.runtime.superstep import Truncator, free_truncated, truncate
 
 
 def _peel(edges: DataFrame, k: int, spark, t: Truncator | None = None) -> DataFrame:

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.truncate import Truncator
+from graphscope_spark.runtime.superstep import Truncator
 
 
 def k_center(graph: LinkGraph, k: int = 4) -> tuple[list[int], DataFrame]:

@@ -15,7 +15,7 @@ Scale shape: the orientation bounds the wedge-join fan-out to
 O(sqrt(E)) per vertex exactly as in triangle counting; each round is two
 joins + one aggregation over a strictly shrinking edge set; the
 driver-side loop truncates lineage per round (stats-reset ``truncate`` —
-the house rule for driver loops, see runtime/truncate.py) so plan cost
+the house rule for driver loops, see runtime/superstep.py) so plan cost
 stays flat however many peel rounds the graph needs.
 
 Support counts are orientation-independent, so a SQL oracle can replay a
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.truncate import Truncator, truncate
+from graphscope_spark.runtime.superstep import Truncator, truncate
 
 
 def _canonical_edges(graph: LinkGraph) -> DataFrame:

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.truncate import Truncator, free_truncated, truncate
+from graphscope_spark.runtime.superstep import Truncator, free_truncated, truncate
 
 
 def _sym_weighted(graph: LinkGraph, weight_col: str | None) -> DataFrame:

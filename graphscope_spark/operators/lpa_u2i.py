@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from graphscope_spark.runtime.truncate import Truncator, free_truncated, truncate
+from graphscope_spark.runtime.superstep import Truncator, free_truncated, truncate
 
 
 def lpa_u2i(spark: SparkSession, u: DataFrame, edges: DataFrame,

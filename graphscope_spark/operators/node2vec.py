@@ -35,7 +35,7 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.functions.dedup import _hash60
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.truncate import Truncator, truncate
+from graphscope_spark.runtime.superstep import Truncator, truncate
 
 
 def _pick_hash(step: int, seed: int, hash_fn: str):

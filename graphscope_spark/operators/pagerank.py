@@ -136,7 +136,9 @@ class PageRankJob(SuperstepJob):
 
         # the reference's two Sum() all-reduces (eps + dangling rank,
         # pagerank_networkx.h:135-146) ride along the state materialization
-        # as observed metrics — each superstep is exactly ONE Spark job
+        # as observed metrics — no separate aggregation pass over the
+        # state (the materialization itself is still several Spark jobs
+        # under AQE: ~4 per superstep in perfbench's traced run)
         obs = Observation()
         new_state = (
             state.join(sums.hint("shuffle_hash"), state["vid"] == sums["dst"], "left")
@@ -340,7 +342,7 @@ class PageRankPushJob(SuperstepJob):
     vanishing fraction of the edge table where the pull variant always
     pays the full |E| shuffle. Dangling residual pushed in round i is
     distributed uniformly in round i+1 (a one-round pipeline register,
-    same carry the pull job uses), keeping every round one Spark job.
+    same carry the pull job uses), so no round needs an extra pass.
 
     Result rank = p + r (remaining residual folded in), so the truncation
     error is bounded by the unretired mass; with theta=0 and k rounds the

@@ -21,7 +21,7 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.traversal import sssp
-from graphscope_spark.runtime.truncate import Truncator
+from graphscope_spark.runtime.superstep import Truncator
 
 
 def sssp_average_length(graph: LinkGraph, source: int,

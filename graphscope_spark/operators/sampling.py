@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph, assign_dense_ids
-from graphscope_spark.runtime.truncate import Truncator, free_truncated, truncate
+from graphscope_spark.runtime.superstep import Truncator, free_truncated, truncate
 
 
 def sampling_path(graph: LinkGraph, num_paths: int = 100, length: int = 3,

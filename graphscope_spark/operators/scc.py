@@ -14,7 +14,8 @@ repeat over the unassigned set A:
 Labels are the minimum vid of each SCC. Each inner fixpoint is a
 frontier-style join+min loop; the outer loop peels at least the SCCs of
 every current minimum-fid root per pass. Loop states are truncated with
-stats reset (runtime/truncate.py) so estimation cost stays constant.
+stats reset (``truncate`` in runtime/superstep.py) so estimation cost
+stays constant.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.truncate import Truncator, truncate
+from graphscope_spark.runtime.superstep import Truncator, truncate
 
 
 def _minprop_fixpoint(edges: DataFrame, labels: DataFrame,

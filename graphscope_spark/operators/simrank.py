@@ -26,8 +26,9 @@ co-reachable pairs, so the scale path is the standard truncated SimRank:
 ``min_score`` prunes pairs whose score falls under the threshold before
 they fan out (the pruned mass is bounded by C·min_score per round, the
 usual truncation argument), and hub vertices (huge |I(v)|) damp
-themselves through the 1/(d_a·d_b) factor.  Each round localCheckpoints
-through Truncator, identical to the other iterative operators.
+themselves through the 1/(d_a·d_b) factor.  Each round is truncated by
+the stats-resetting ``Truncator`` of runtime/superstep.py, identical to
+the other driver-loop operators.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.truncate import Truncator
+from graphscope_spark.runtime.superstep import Truncator
 
 __all__ = ["simrank"]
 

@@ -395,7 +395,7 @@ def path_expand(graph: LinkGraph, sources: list[int], min_hops: int = 1,
     if mode != "path":
         raise ValueError("mode must be 'vertex' or 'path'")
     spark = graph.spark
-    from graphscope_spark.runtime.truncate import Truncator
+    from graphscope_spark.runtime.superstep import Truncator
     t = Truncator()
     edges = graph.edges.select("src", "dst").distinct()
     frontier = t(spark.createDataFrame(

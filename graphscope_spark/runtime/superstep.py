@@ -18,6 +18,27 @@ scalars and per-partition metrics (rows + xxhash64 checksum + timing). The
 manifest makes a killed job resumable mid-iteration (north-rule
 requirement; replaces vineyard persistence, reference
 grape_instance.cc:302-306).
+
+Both loop styles truncate through one primitive, ``truncate``: an eager
+``localCheckpoint`` whose block RDD is read off the checkpointed plan (a
+``LogicalRDD``) and freed by ``free_truncated`` once superseded, since
+``DataFrame.unpersist()`` never frees localCheckpoint blocks. Its one
+choice is what the truncated plan keeps:
+
+* ``keep_partitioning=True`` (the runner): plain ``localCheckpoint``
+  keeps ``outputPartitioning``, so the next step's joins against the
+  src-partitioned edge cache stay exchange-free (guarded by
+  tests/test_plan_quality.py). Runner steps are shallow, so the child
+  statistics the LogicalRDD carries do not compound measurably.
+* ``keep_partitioning=False`` (``Truncator`` driver loops): the carried
+  statistics are reset by rebuilding the DataFrame over the same blocks
+  with ``internalCreateDataFrame``. Spark's size-only estimator
+  multiplies child ``sizeInBytes`` through joins as arbitrary-precision
+  integers, so a loop whose state plan has J joins grows the carried
+  stat's bit-length ~J-fold per round (observed: 0.4 s -> 200 s per
+  Louvain round on a 120-vertex graph, 7 GB driver RSS, in
+  ``BigInteger.multiply`` under ``SizeInBytesOnlyStatsPlanVisitor``).
+  The rebuilt plan loses ``outputPartitioning``.
 """
 
 from __future__ import annotations
@@ -25,7 +46,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,8 +74,6 @@ class SuperstepJob:
     state — so each superstep computes its pipeline exactly once: the
     runner's lineage-truncating localCheckpoint is the only pass over the
     join/agg plan, and the convergence aggregate reads the cached blocks.
-    (A legacy 3-tuple return ``(state, scalars, converged)`` where the
-    job materializes its own state is also accepted.)
 
     ``scalars`` is a JSON-serializable dict of loop-carried values (e.g.
     PageRank's dangling_sum / eps — reference pagerank_networkx.h:94,146).
@@ -76,13 +95,64 @@ class SuperstepJob:
         return {}
 
 
+def truncate(df: DataFrame, keep_partitioning: bool = False) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage (module docstring:
+    ``keep_partitioning`` vs. stats reset). The result carries the
+    checkpoint's block RDD in ``_gs_blocks`` for ``free_truncated``."""
+    ckpt = df.localCheckpoint(eager=True)
+    jdf = ckpt._jdf
+    blocks = jdf.queryExecution().logical().rdd()
+    if not keep_partitioning:
+        spark = df.sparkSession
+        ckpt = DataFrame(spark._jsparkSession.internalCreateDataFrame(
+            jdf.queryExecution().toRdd(), jdf.schema(), False), spark)
+    ckpt._gs_blocks = blocks
+    return ckpt
+
+
+def free_truncated(df: DataFrame | None) -> None:
+    """Free the block RDD a ``truncate`` call created. Only call once the
+    data is provably dead: a freed block cannot be recomputed."""
+    blocks = getattr(df, "_gs_blocks", None)
+    if blocks is not None:
+        blocks.unpersist(False)
+        df._gs_blocks = None
+
+
+class Truncator:
+    """Per-slot ``truncate`` for driver loops.
+
+    ``t(df, slot)`` truncates ``df`` (materializing it, which may read
+    the slot's previous checkpoint) and THEN frees the slot's previous
+    checkpoint, so a loop keeps at most one live state per slot. Call
+    ``close()`` once the final results have been consumed (or copied out
+    by a further ``truncate``)."""
+
+    def __init__(self):
+        self._live: dict[str, DataFrame] = {}
+
+    def __call__(self, df: DataFrame, slot: str = "state") -> DataFrame:
+        out = truncate(df)
+        free_truncated(self._live.get(slot))
+        self._live[slot] = out
+        return out
+
+    def free(self, slot: str) -> None:
+        """Free a slot's live checkpoint now (data provably dead)."""
+        free_truncated(self._live.pop(slot, None))
+
+    def close(self) -> None:
+        for df in self._live.values():
+            free_truncated(df)
+        self._live.clear()
+
+
 @dataclass
 class StepMetrics:
     step: int
     wall_ms: float
     scalars: dict
     checkpointed: bool = False
-    per_partition: list = field(default_factory=list)
 
 
 class SuperstepRunner:
@@ -91,55 +161,11 @@ class SuperstepRunner:
         spark: SparkSession,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 5,
-        partition_metrics: bool = True,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     ):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
-        self.partition_metrics = partition_metrics
-        self.storage_level = storage_level
         self.history: list[StepMetrics] = []
-        self._ckpt_rdd_ids: list[int] = []  # live localCheckpoint block-RDDs
-
-    # ---- localCheckpoint block management ---------------------------------
-    #
-    # DataFrame.unpersist() does NOT free the blocks a localCheckpoint
-    # materialized (they belong to an internal RDD, not the Dataset cache),
-    # so a naive loop leaks one state-sized block set per superstep. The
-    # runner diffs the persistent-RDD registry around the checkpoint call
-    # and explicitly unpersists the previous iteration's block RDDs.
-    #
-    # The diff is filtered to RDDs whose isLocallyCheckpointed() flag is
-    # set: the eager localCheckpoint action can ALSO materialize lazily
-    # registered Dataset caches (the init/reloaded state's persist(), a
-    # graph's edge cache on its first use), and those ids must be neither
-    # tracked (leaking the real block RDD) nor dropped (unpersisting a
-    # live shared cache mid-run).
-
-    def _persistent_ids(self) -> set[int]:
-        m = self.spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
-    def _new_ckpt_ids(self, before: set[int]) -> list[int]:
-        m = self.spark.sparkContext._jsc.getPersistentRDDs()
-        out = []
-        for k in m.keySet().toArray():
-            kid = int(k)
-            if kid in before:
-                continue
-            try:
-                if m.get(kid).rdd().isLocallyCheckpointed():
-                    out.append(kid)
-            except Exception:
-                pass  # unknown RDD kind — leave it alone
-        return out
-
-    def _drop_rdds(self, rdd_ids: list[int]) -> None:
-        m = self.spark.sparkContext._jsc.getPersistentRDDs()
-        for rdd_id in rdd_ids:
-            if m.containsKey(rdd_id):
-                m.get(rdd_id).unpersist(False)
 
     # ---- manifest helpers --------------------------------------------------
 
@@ -153,23 +179,21 @@ class SuperstepRunner:
                           scalars: dict, prev_ckpt: int | None) -> DataFrame:
         spath = self._state_path(step)
         state.write.mode("overwrite").parquet(spath)
-        reloaded = self.spark.read.parquet(spath).persist(self.storage_level)
+        reloaded = self.spark.read.parquet(spath).persist(StorageLevel.MEMORY_AND_DISK)
 
-        per_part = []
-        if self.partition_metrics:
-            cols = [F.col(c) for c in reloaded.columns]
-            # bit_xor is order-independent and cannot overflow (ANSI mode
-            # is on by default in Spark 4; sum(xxhash64) overflows long).
-            rows = (
-                reloaded.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"),
-                     F.bit_xor(F.xxhash64(*cols)).alias("checksum"))
-                .collect()
-            )
-            per_part = [
-                {"pid": r["pid"], "rows": r["rows"], "checksum": str(r["checksum"])}
-                for r in sorted(rows, key=lambda r: r["pid"])
-            ]
+        cols = [F.col(c) for c in reloaded.columns]
+        # bit_xor is order-independent and cannot overflow (ANSI mode is
+        # on by default in Spark 4; sum(xxhash64) overflows long).
+        rows = (
+            reloaded.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(F.count("*").alias("rows"),
+                 F.bit_xor(F.xxhash64(*cols)).alias("checksum"))
+            .collect()
+        )
+        per_part = [
+            {"pid": r["pid"], "rows": r["rows"], "checksum": str(r["checksum"])}
+            for r in sorted(rows, key=lambda r: r["pid"])
+        ]
 
         manifest = {
             "algo": job.name,
@@ -215,9 +239,6 @@ class SuperstepRunner:
         ``resume=True`` and a readable manifest, restart from the last
         checkpointed superstep instead of ``init``."""
         self.history = []
-        # a previous run()'s final state may still be referenced by the
-        # caller — start tracking fresh rather than dropping its blocks
-        self._ckpt_rdd_ids = []
         start_step = 0
         last_ckpt: int | None = None
 
@@ -228,57 +249,47 @@ class SuperstepRunner:
                     f"resume config mismatch: checkpoint {manifest['config']} "
                     f"!= job {job.config()}"
                 )
-            state = self.spark.read.parquet(manifest["state_path"]).persist(self.storage_level)
+            state = self.spark.read.parquet(manifest["state_path"]).persist(
+                StorageLevel.MEMORY_AND_DISK)
             scalars = manifest["scalars"]
             start_step = manifest["step"]
             last_ckpt = manifest["step"]
         else:
             state, scalars = job.init(self.spark)
-            state = state.persist(self.storage_level)
+            state = state.persist(StorageLevel.MEMORY_AND_DISK)
 
         converged = scalars.get("converged", False)
         step_no = start_step
         while not converged and step_no < max_steps:
             step_no += 1
             t0 = time.perf_counter()
-            result = job.step(state, step_no, scalars)
+            raw_state, finalize = job.step(state, step_no, scalars)
 
             # Truncate lineage EVERY superstep: the new state's logical
             # plan references the old state several times (contrib +
             # apply join), so without truncation analysis cost grows
-            # ~3^k with iteration k (SURVEY.md §7.3 risk #1).
-            # localCheckpoint materializes the plan ONCE and replaces it
-            # with a LogicalRDD; the job's finalize then computes its
-            # scalar aggregates from the materialized blocks.
-            if len(result) == 2 and callable(result[1]):
-                raw_state, finalize = result
-                before = self._persistent_ids()
-                new_state = raw_state.localCheckpoint(eager=True)
-                new_ids = self._new_ckpt_ids(before)
-                scalars, converged = finalize(new_state)
-            else:  # legacy: job materialized (persisted) its own state
-                legacy_state, scalars, converged = result
-                before = self._persistent_ids()
-                new_state = legacy_state.localCheckpoint(eager=True)
-                new_ids = self._new_ckpt_ids(before)
-                legacy_state.unpersist()
-            self._drop_rdds(self._ckpt_rdd_ids)
-            self._ckpt_rdd_ids = new_ids
+            # ~3^k with iteration k (SURVEY.md §7.3 risk #1). The
+            # checkpoint materializes the plan ONCE; the job's finalize
+            # then computes its scalar aggregates from the blocks.
+            new_state = truncate(raw_state, keep_partitioning=True)
+            scalars, converged = finalize(new_state)
+            # the previous state is a checkpoint (blocks) or the persisted
+            # init/reloaded frame (Dataset cache)
+            free_truncated(state)
+            state.unpersist()
+            state = new_state
 
             checkpointed = False
             if self.checkpoint_dir and (
                 converged or step_no % self.checkpoint_every == 0
             ):
                 scalars = dict(scalars, converged=bool(converged))
-                ckpt_state = self._write_checkpoint(job, new_state, step_no, scalars, last_ckpt)
-                self._drop_rdds(self._ckpt_rdd_ids)
-                self._ckpt_rdd_ids = []
-                new_state = ckpt_state
+                ckpt_state = self._write_checkpoint(job, state, step_no, scalars, last_ckpt)
+                free_truncated(state)
+                state = ckpt_state
                 last_ckpt = step_no
                 checkpointed = True
 
-            state.unpersist()
-            state = new_state
             m = StepMetrics(
                 step=step_no,
                 wall_ms=(time.perf_counter() - t0) * 1000.0,

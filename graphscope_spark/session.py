@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """24g, capped at half the host's physical memory. G1 grows the heap
+    toward -Xmx under a high allocation rate (query planning churns
+    short-lived garbage), so a cap above physical RAM lets the kernel
+    OOM-kill the JVM before a full GC runs (seen at 15 GB RSS on a
+    16 GB host)."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(24 * 1024, phys_mb // 2)}m"
+
+
 def build_session(
     cpus: int | None = None,
     app_name: str = "graphscope-spark",
@@ -53,7 +63,8 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # iterative jobs re-read persisted state; keep blocks compact
         .config("spark.sql.inMemoryColumnarStorage.compressed", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )

@@ -149,7 +149,7 @@ class IncrementalMinHashDedup:
         # decides each doc once all its smaller candidate neighbors are
         # decided: admit iff no smaller ADMITTED neighbor and not
         # dropped by the state in (2). Rounds = similarity-chain depth.
-        from graphscope_spark.runtime.truncate import Truncator
+        from graphscope_spark.runtime.superstep import Truncator
 
         sizes = (bkts.groupBy("band", "key")
                  .agg(F.count(F.lit(1)).alias("_n"))

@@ -29,7 +29,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphscope_spark.runtime.truncate import Truncator
+from graphscope_spark.runtime.superstep import Truncator
 
 
 class _PublishedDir:

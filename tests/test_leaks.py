@@ -14,6 +14,35 @@ def _persistent_count(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def _freed_graph_caches(spark, g) -> list[str]:
+    """Names of the graph's cached tables/views whose column buffers were
+    built (the cache's row accumulator counted rows) but are no longer
+    registered as persistent RDDs, i.e. something unpersisted a cache
+    the graph still owns."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    live = {int(k) for k in
+            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+    views = {name: df for name, df in vars(g).items()
+             if name in ("edges", "vertices") or name.endswith("_edges")
+             or name.endswith("_degrees")}
+    views.update({f"_aux_cached[{i}]": df
+                  for i, df in enumerate(g._aux_cached)})
+    freed = []
+    for name, df in views.items():
+        if df is None:
+            continue
+        cached = cm.lookupCachedData(df._jdf)
+        if not cached.isDefined():
+            continue
+        cache = cached.get().cachedRepresentation().cacheBuilder()
+        if cache.rowCountStats().value() == 0:
+            continue  # never materialized: cachedColumnBuffers() would build it
+        if not (cache.isCachedColumnBuffersLoaded()
+                and cache.cachedColumnBuffers().id() in live):
+            freed.append(name)
+    return freed
+
+
 def _mk(spark, n=60, m=240, seed=8):
     vertices, edges = power_law_graph(n=n, m=m, seed=seed, with_dangling=False)
     return LinkGraph(
@@ -49,6 +78,10 @@ def test_loop_algorithms_release_checkpoints(spark, algo):
     # handful of live result/graph-cache entries may remain
     leaked = after - before
     assert leaked <= 6, f"{algo} leaked {leaked} persistent RDDs"
+    # reclamation frees only the loop's own checkpoint blocks, never a
+    # graph cache the call happened to materialize first
+    freed = _freed_graph_caches(spark, g)
+    assert not freed, f"{algo} unpersisted graph caches {freed}"
     g.unpersist_all()
 
 def test_pattern_match_directed_releases_edges(spark):

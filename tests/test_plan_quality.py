@@ -87,6 +87,34 @@ def test_pagerank_push_step_single_exchange_no_state_broadcast(spark):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
+def test_truncate_stats_reset(spark):
+    """Driver-loop truncation resets the statistics the checkpoint
+    carries. A plain localCheckpoint keeps the child plan's estimate,
+    which the size-only estimator multiplies through every join, so it
+    compounds round after round as a BigInt (minutes of planning per
+    Louvain round); the reset plan falls back to defaultSizeInBytes."""
+    from pyspark.sql import functions as F
+
+    from graphscope_spark.runtime.superstep import free_truncated, truncate
+
+    t = spark.range(1000).withColumn("k", F.col("id") % 10)
+    df = t
+    for i in range(4):
+        df = df.join(t.withColumnRenamed("k", f"k{i}"), "id")
+
+    def size_in_bytes(d):
+        return int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    kept = truncate(df, keep_partitioning=True)
+    reset = truncate(df)
+    assert size_in_bytes(kept) > default  # what the reset exists to drop
+    assert size_in_bytes(reset) == default
+    assert reset.count() == 1000
+    free_truncated(kept)
+    free_truncated(reset)
+
+
 def test_triangle_plan_no_cartesian(spark):
     from graphscope_spark import triangles
 
