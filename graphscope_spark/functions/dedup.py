@@ -544,49 +544,32 @@ def dedup_keep_list(df: DataFrame, pairs: DataFrame,
     Real corpus dedup needs the TRANSITIVE closure of the pairwise
     near-dup relation (A~B, B~C must collapse to one cluster even when
     A~C was never emitted), then one canonical representative per
-    cluster. The closure is HashMin connected components over the pair
-    graph, run directly on the caller's id type (numeric OR string —
-    the pair families all preserve the input id type, so casting here
-    to long would fail under ANSI for 'doc-0042'-style ids and silently
-    null them otherwise); min-id labels make the canonical doc the
-    smallest id, deterministic. Documents in no pair keep themselves.
+    cluster. The closure is the package's HashMin (``hashmin`` in
+    operators/wcc.py) over the symmetric pair graph, run directly on
+    the caller's id type (numeric OR string — the pair families all
+    preserve the input id type, so casting here to long would fail
+    under ANSI for 'doc-0042'-style ids and silently null them
+    otherwise); min-id labels make the canonical doc the smallest id,
+    deterministic. Documents in no pair keep themselves.
     Pair graphs are tiny relative to the corpus (only near-dups
     appear), so the iterative stage runs on a vanishing fraction of the
     100 TB input; the labeling join back onto ``df`` is one
     broadcast-or-shuffle hash join.
     """
-    from graphscope_spark.runtime.superstep import Truncator, truncate
+    from graphscope_spark.operators.wcc import hashmin
+    from graphscope_spark.runtime.superstep import free_truncated, truncate
 
     e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    t = Truncator()
+    sym = truncate(e.union(e.select(F.col("dst").alias("src"),
+                                    F.col("src").alias("dst"))).distinct())
     try:
-        sym = t(e.union(e.select(F.col("dst").alias("src"),
-                                 F.col("src").alias("dst"))).distinct(),
-                "edges")
-        lab = t(sym.select(F.col("src").alias("vid"))
-                .union(sym.select(F.col("dst").alias("vid"))).distinct()
-                .select("vid", F.col("vid").alias("comp")), "lab")
-        while True:
-            msgs = (sym.join(lab.select(F.col("vid").alias("src"),
-                                        F.col("comp").alias("c")), "src")
-                    .groupBy(F.col("dst").alias("vid"))
-                    .agg(F.min("c").alias("mc")))
-            nl = t(lab.join(msgs, "vid", "left")
-                   .select("vid",
-                           F.least("comp", F.coalesce("mc", "comp"))
-                           .alias("comp"),
-                           F.coalesce(F.col("mc") < F.col("comp"),
-                                      F.lit(False)).alias("chg")), "lab")
-            changed = nl.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-            lab = nl.drop("chg")
-            if changed == 0:
-                break
-        # final labels referenced by the returned plan: truncate a copy
-        # OUT of the Truncator so close() can free the loop checkpoints
-        comp = truncate(lab).select(F.col("vid").alias(id_col),
-                                    F.col("comp").alias("_cluster"))
+        lab = hashmin(sym, sym.select(F.col("src").alias("vid"))
+                      .union(sym.select(F.col("dst").alias("vid"))).distinct()
+                      .select("vid", F.col("vid").alias("comp")))
     finally:
-        t.close()
+        free_truncated(sym)
+    # the returned plan reads lab's blocks, so they stay live with it
+    comp = lab.select(F.col("vid").alias(id_col), F.col("comp").alias("_cluster"))
     return (df.select(id_col).join(comp, id_col, "left")
             .select(id_col,
                     F.coalesce("_cluster", F.col(id_col)).alias("cluster"))

@@ -20,7 +20,8 @@ ARBITRARY rooted spanning forest (here: the deterministic BFS forest):
        R2: tree edge (w, v) with non-root w: if low(v) < pre(w) or
            high(v) ≥ pre(w) + sz(w) (the subtree escapes w's interval)
            → aux edge {v, w};
-  5. connected components of the aux graph (HashMin fixpoint) = the
+  5. connected components of the aux graph (the shared HashMin
+     fixpoint, ``hashmin`` in operators/wcc.py) = the
      biconnected components; a non-tree edge inherits the component of
      its deeper endpoint's tree edge.
 
@@ -41,7 +42,9 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.bridges import _bfs_forest
-from graphscope_spark.runtime.superstep import Truncator, truncate
+from graphscope_spark.operators.wcc import hashmin
+from graphscope_spark.runtime.superstep import (Truncator, free_truncated,
+                                                truncate)
 
 
 def _tree_with_pre(graph: LinkGraph, t: Truncator):
@@ -145,8 +148,8 @@ def _bcc_labels(graph: LinkGraph):
         (F.col("pre_hi") >= F.col("pre_lo") + F.col("sz_lo"))
         | (F.col("pre_lo") >= F.col("pre_hi") + F.col("sz_hi"))
     )
-    r1 = nt.filter(unrelated).select(F.col("lo").alias("a"),
-                                     F.col("hi").alias("b"))
+    r1 = nt.filter(unrelated).select(F.col("lo").alias("src"),
+                                     F.col("hi").alias("dst"))
     # R2: child v escapes its (non-root) parent w's interval
     pw = lh.select(F.col("vid").alias("parent"), F.col("pre").alias("wpre"),
                    F.col("sz").alias("wsz"),
@@ -157,33 +160,16 @@ def _bcc_labels(graph: LinkGraph):
         .filter(F.col("gparent").isNotNull()
                 & ((F.col("low") < F.col("wpre"))
                    | (F.col("high") >= F.col("wpre") + F.col("wsz"))))
-        .select(F.col("vid").alias("a"), F.col("parent").alias("b"))
+        .select(F.col("vid").alias("src"), F.col("parent").alias("dst"))
     )
     aux = t(r1.unionByName(r2).distinct(), "aux")
     aux_sym = aux.unionByName(
-        aux.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        aux.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
-    # ---- components of the aux graph: HashMin fixpoint -----------------
-    lab = t(tree.filter(F.col("parent").isNotNull())
-            .select("vid", F.col("vid").alias("comp")), "lab")
-    while True:
-        msgs = (
-            aux_sym.join(lab.withColumnRenamed("vid", "a")
-                         .withColumnRenamed("comp", "ac"), "a")
-            .groupBy(F.col("b").alias("vid")).agg(F.min("ac").alias("mc"))
-        )
-        new_lab = (
-            lab.join(msgs, "vid", "left")
-            .select("vid",
-                    F.least("comp", F.coalesce("mc", "comp")).alias("comp"),
-                    F.coalesce(F.col("mc") < F.col("comp"), F.lit(False))
-                    .alias("chg"))
-        )
-        new_lab = t(new_lab, "lab")
-        changed = new_lab.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        lab = new_lab.drop("chg")
-        if changed == 0:
-            break
+    # ---- components of the aux graph: WCC's HashMin -------------------
+    # ``lab`` is not in ``t``: callers free it after materializing outputs
+    lab = hashmin(aux_sym, tree.filter(F.col("parent").isNotNull())
+                  .select("vid", F.col("vid").alias("comp")))
     return tree, nt, lab, max_depth, t
 
 
@@ -238,6 +224,7 @@ def bcc_and_articulation(graph: LinkGraph) -> tuple[DataFrame, DataFrame]:
     edges = truncate(_bcc_edge_labels(tree, nt, lab))
     artic = truncate(_articulation_vids(tree, lab))
     t.close()
+    free_truncated(lab)
     return edges, artic
 
 
@@ -248,6 +235,7 @@ def biconnected_components(graph: LinkGraph) -> DataFrame:
     tree, nt, lab, _, t = _bcc_labels(graph)
     out = truncate(_bcc_edge_labels(tree, nt, lab))
     t.close()
+    free_truncated(lab)
     return out
 
 
@@ -258,4 +246,5 @@ def articulation_points(graph: LinkGraph) -> DataFrame:
     tree, nt, lab, _, t = _bcc_labels(graph)
     out = truncate(_articulation_vids(tree, lab))
     t.close()
+    free_truncated(lab)
     return out

@@ -11,11 +11,11 @@ repeat over the unassigned set A:
      when its forward-label root is backward-reachable
      (s.scc == d.fid ⇒ d.scc = d.fid);
   5. A = still unassigned.
-Labels are the minimum vid of each SCC. Each inner fixpoint is a
-frontier-style join+min loop; the outer loop peels at least the SCCs of
-every current minimum-fid root per pass. Loop states are truncated with
-stats reset (``truncate`` in runtime/superstep.py) so estimation cost
-stays constant.
+Labels are the minimum vid of each SCC. Step 2 is WCC's HashMin run by
+the superstep runner (``hashmin``, operators/wcc.py); the backward sweep
+truncates its states with stats reset (``Truncator``) so estimation cost
+stays constant. The outer loop peels at least the SCCs of every current
+minimum-fid root per pass.
 """
 
 from __future__ import annotations
@@ -25,31 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import Truncator, truncate
-
-
-def _minprop_fixpoint(edges: DataFrame, labels: DataFrame,
-                      t: Truncator, slot: str) -> DataFrame:
-    """Min-label propagation over ``edges`` restricted to the label set:
-    labels (vid, lab) — push lab along src→dst until no change."""
-    labels = t(labels, slot)
-    while True:
-        msgs = (
-            edges.join(labels.withColumnRenamed("vid", "src")
-                       .withColumnRenamed("lab", "slab"), "src")
-            .groupBy("dst").agg(F.min("slab").alias("mlab"))
-        )
-        new = (
-            labels.join(msgs, labels["vid"] == msgs["dst"], "left")
-            .select(labels["vid"],
-                    F.least(labels["lab"], F.coalesce("mlab", labels["lab"])).alias("lab"),
-                    (F.coalesce(F.col("mlab") < labels["lab"], F.lit(False))).alias("chg"))
-        )
-        new = t(new, slot)
-        changed = new.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        labels = new.drop("chg")
-        if changed == 0:
-            return labels
+from graphscope_spark.operators.wcc import hashmin
+from graphscope_spark.runtime.superstep import Truncator, free_truncated
 
 
 def scc(graph: LinkGraph) -> DataFrame:
@@ -72,13 +49,12 @@ def scc(graph: LinkGraph) -> DataFrame:
         re = t(
             redges_all.join(av.withColumnRenamed("vid", "src"), "src", "left_semi")
             .join(av.withColumnRenamed("vid", "dst"), "dst", "left_semi"), "re")
-        # forward min-label fixpoint
-        fid = _minprop_fixpoint(
-            e, active.select("vid", F.col("vid").alias("lab")), t, "fid")
+        # forward min-label fixpoint along the directed active edges
+        fid = hashmin(e, active.select("vid", F.col("vid").alias("comp")))
         # backward sweep from roots: a vertex joins scc=fid[v] when fid[v]'s
         # root reaches it backward through vertices of the same color
-        root = fid.filter(F.col("vid") == F.col("lab")) \
-            .select("vid", F.col("lab").alias("scc"))
+        root = fid.filter(F.col("vid") == F.col("comp")) \
+            .select("vid", F.col("comp").alias("scc"))
         member = t(root, "member")  # (vid, scc) confirmed this pass
         frontier = member
         while True:
@@ -87,7 +63,7 @@ def scc(graph: LinkGraph) -> DataFrame:
                 .select(F.col("dst").alias("vid"), "scc").distinct()
                 .join(member, "vid", "left_anti")
                 # only vertices whose forward label equals the color join
-                .join(fid.withColumnRenamed("lab", "flab"), "vid")
+                .join(fid.withColumnRenamed("comp", "flab"), "vid")
                 .filter(F.col("scc") == F.col("flab"))
                 .select("vid", "scc")
             )
@@ -99,8 +75,9 @@ def scc(graph: LinkGraph) -> DataFrame:
         assigned = t(member if assigned is None
                      else assigned.unionByName(member), "assigned")
         active = t(active.join(member.select("vid"), "vid", "left_anti"), "active")
+        free_truncated(fid)
     edges_all.unpersist()
     out = assigned.select("vid", "scc")
-    for slot in ("active", "e", "re", "fid", "member", "cand"):
+    for slot in ("active", "e", "re", "member", "cand"):
         t.free(slot)
     return out

@@ -15,6 +15,12 @@ rounds have tiny frontiers, which AQE converts to broadcast joins) →
 salted min by dst → left join onto state → `least` merge; the frontier is
 folded into the state DataFrame as a ``changed`` flag so checkpoints
 capture it and resume is exact.
+
+``HashMinJob`` is the package's one min-label fixpoint (the reference
+runs cc and SCC's forward colouring as the same FLASH EdgeMap loop):
+``WCCJob`` feeds it the graph's symmetric edges, and ``hashmin`` runs it
+for scc (directed edges), bcc (aux graph), ``dedup_keep_list`` (pair
+graph) and ``IncrementalWCC`` (component-link graph).
 """
 
 from __future__ import annotations
@@ -25,59 +31,39 @@ from pyspark.sql import functions as F
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.runtime.salting import salted_min
 from graphscope_spark.runtime.superstep import (BROADCAST_CAP_ROWS,
-                                                SuperstepJob, SuperstepRunner)
+                                                SuperstepJob, SuperstepRunner,
+                                                free_truncated, truncate)
 
 
-class WCCJob(SuperstepJob):
-    name = "wcc"
+class HashMinJob(SuperstepJob):
+    """HashMin over ``msg_edges`` (src, dst) from initial ``labels``
+    (vid, comp): each changed vertex pushes its comp along its out-edges
+    until no label drops. Messages flow src→dst only, so undirected
+    callers pass both orientations. ``num_vertices`` (the label count)
+    scales the sparse/dense gate."""
 
-    def __init__(self, graph: LinkGraph, salt: int = 0,
-                 sparse_threshold: float = 0.05,
-                 init_components: DataFrame | None = None):
-        self.graph = graph
+    name = "hashmin"
+
+    def __init__(self, msg_edges: DataFrame, labels: DataFrame,
+                 num_vertices: int, salt: int = 0,
+                 sparse_threshold: float = 0.05):
+        self.msg_edges = msg_edges
+        self.labels = labels
+        self.num_vertices = num_vertices
         self.salt = salt
-        # Ingress-style warm start (reference
-        # docs/analytical_engine/ingress.md:1-28 — monotone algorithms
-        # restart from a previous run's state): (vid, comp) from a prior
-        # run on a SUBGRAPH of this graph (grow-only updates). Every warm
-        # comp value is a vid inside the same (merged) component, so the
-        # HashMin fixpoint is identical to a cold run — it just starts
-        # pre-propagated and converges in ~diameter-of-the-contracted
-        # component graph supersteps instead of graph diameter. NOT valid
-        # after edge deletions (use streaming/incremental.py for those).
-        self.init_components = init_components
         # FLASH's EdgeMap dense/sparse switch (reference
         # apps/flash/api.h:358-380): a big frontier must not broadcast
         # (state-sized, serial build) — shuffle-hash join; a small late
         # frontier is cheapest broadcast against the edge table.
         self.sparse_threshold = sparse_threshold
-        self.msg_edges = graph.sym_edges()
 
     def config(self) -> dict:
         return {"algo": self.name, "salt": self.salt}
 
     def init(self, spark: SparkSession):
-        if self.init_components is None:
-            state = self.graph.vertices.select(
-                "vid", F.col("vid").alias("comp"), F.lit(True).alias("changed")
-            )
-        else:
-            warm = self.init_components.select(
-                "vid", F.col("comp").alias("wcomp"))
-            # least(vid, warm) keeps HashMin's monotone invariant even if
-            # a caller passes labels from an unrelated graph; vertices new
-            # to this graph (no warm row) start cold at their own vid
-            state = (
-                self.graph.vertices.select("vid")
-                .join(warm.hint("shuffle_hash"), "vid", "left")
-                .select(
-                    "vid",
-                    F.least(F.col("vid"), F.coalesce("wcomp", F.col("vid"))).alias("comp"),
-                    F.lit(True).alias("changed"),
-                )
-            )
-        return state, {"frontier": self.graph.num_vertices,
-                       "msgs": self.graph.num_vertices}
+        state = self.labels.select("vid", "comp", F.lit(True).alias("changed"))
+        return state, {"frontier": self.num_vertices,
+                       "msgs": self.num_vertices}
 
     def step(self, state: DataFrame, step_no: int, scalars: dict):
         # sparse mode broadcasts the aggregated message table so the O(V)
@@ -85,7 +71,7 @@ class WCCJob(SuperstepJob):
         # frontier of hubs can still be O(V) rows, so the gate needs BOTH
         # the frontier count and the previous step's observed message
         # volume under the threshold (plus an absolute row cap).
-        thr = self.sparse_threshold * self.graph.num_vertices
+        thr = self.sparse_threshold * self.num_vertices
         sparse = (scalars["frontier"] < thr
                   and scalars.get("msgs", scalars["frontier"])
                   < min(thr, BROADCAST_CAP_ROWS))
@@ -118,6 +104,57 @@ class WCCJob(SuperstepJob):
                      "msgs": int(vals["m"] or 0)}, changed == 0)
 
         return new_state, finalize
+
+
+class WCCJob(HashMinJob):
+    name = "wcc"
+
+    def __init__(self, graph: LinkGraph, salt: int = 0,
+                 sparse_threshold: float = 0.05,
+                 init_components: DataFrame | None = None):
+        # Ingress-style warm start (reference
+        # docs/analytical_engine/ingress.md:1-28 — monotone algorithms
+        # restart from a previous run's state): (vid, comp) from a prior
+        # run on a SUBGRAPH of this graph (grow-only updates). Every warm
+        # comp value is a vid inside the same (merged) component, so the
+        # HashMin fixpoint is identical to a cold run — it just starts
+        # pre-propagated and converges in ~diameter-of-the-contracted
+        # component graph supersteps instead of graph diameter. NOT valid
+        # after edge deletions (use streaming/incremental.py for those).
+        if init_components is None:
+            labels = graph.vertices.select("vid", F.col("vid").alias("comp"))
+        else:
+            warm = init_components.select("vid", F.col("comp").alias("wcomp"))
+            # least(vid, warm) keeps HashMin's monotone invariant even if
+            # a caller passes labels from an unrelated graph; vertices new
+            # to this graph (no warm row) start cold at their own vid
+            labels = (
+                graph.vertices.select("vid")
+                .join(warm.hint("shuffle_hash"), "vid", "left")
+                .select("vid", F.least(F.col("vid"), F.coalesce("wcomp", F.col("vid")))
+                        .alias("comp"))
+            )
+        super().__init__(graph.sym_edges(), labels, graph.num_vertices,
+                         salt=salt, sparse_threshold=sparse_threshold)
+
+
+def hashmin(msg_edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """HashMin fixpoint of ``labels`` (vid, comp) over ``msg_edges``
+    (src, dst) on a fresh ``SuperstepRunner``; returns (vid, comp).
+
+    ``labels`` is materialized and counted once (the count scales the
+    sparse/dense gate). The result is a ``truncate`` result: the caller
+    frees it with ``free_truncated`` once consumed, and must not hand it
+    to a ``Truncator`` slot."""
+    labels = truncate(labels.select("vid", "comp"))
+    try:
+        job = HashMinJob(msg_edges, labels, labels.count())
+        state, _ = SuperstepRunner(labels.sparkSession).run(job)
+    finally:
+        free_truncated(labels)
+    out = state.select("vid", "comp")
+    out._gs_blocks = state._gs_blocks
+    return out
 
 
 def wcc(graph: LinkGraph, salt: int = 0,

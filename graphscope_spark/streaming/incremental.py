@@ -10,9 +10,10 @@ Per batch (foreachBatch):
      the component — the same labels batch ``wcc`` produces);
   2. relabel the batch edges' endpoints with their current comp
      (unseen vertices label themselves);
-  3. HashMin fixpoint over the COMPONENT-link graph only — one row per
-     distinct (comp_a, comp_b) pair in the batch, radically smaller
-     than the accumulated edge set;
+  3. HashMin fixpoint (the shared ``hashmin`` of operators/wcc.py)
+     over the COMPONENT-link graph only — one row per distinct
+     (comp_a, comp_b) pair in the batch, radically smaller than the
+     accumulated edge set;
   4. apply the comp→comp mapping to the state, union new vertices,
      write back (crash-safe versioned publish — see ``_PublishedDir``).
 
@@ -29,7 +30,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphscope_spark.runtime.superstep import Truncator
+from graphscope_spark.operators.wcc import hashmin
+from graphscope_spark.runtime.superstep import free_truncated
 
 
 class _PublishedDir:
@@ -117,45 +119,28 @@ class IncrementalWCC:
                    .withColumnRenamed("comp", "cs"), "src")
             .join(lab.withColumnRenamed("vid", "dst")
                   .withColumnRenamed("comp", "cd"), "dst")
-            .select("cs", "cd").filter(F.col("cs") != F.col("cd")).distinct()
+            .select(F.col("cs").alias("src"), F.col("cd").alias("dst"))
+            .filter(F.col("src") != F.col("dst")).distinct()
         )
-        # HashMin fixpoint over the component-link graph (tiny). Truncator
-        # slots reclaim each superseded checkpoint deterministically — a
-        # long-running sink would otherwise accumulate blocks every batch
-        # try/finally: a failed batch (executor loss, disk-full mid-write)
-        # must still free the loop's localCheckpoint blocks — streaming
-        # retries would otherwise leak blocks every failed attempt
-        t = Truncator()
+        # HashMin over the component-link graph (tiny). try/finally: a
+        # failed batch must still free m's blocks — a long-running sink
+        # would otherwise leak them on every streaming retry
+        pairs = le.unionByName(le.select(F.col("dst").alias("src"),
+                                         F.col("src").alias("dst")))
+        m = hashmin(pairs, lab.select(F.col("comp").alias("vid")).distinct()
+                    .select("vid", F.col("vid").alias("comp")))
         try:
-            pairs = le.unionByName(le.select(F.col("cd").alias("cs"),
-                                             F.col("cs").alias("cd")))
-            m = t(lab.select(F.col("comp").alias("c")).distinct()
-                  .select("c", F.col("c").alias("root")), "m")
-            while True:
-                msgs = (
-                    pairs.join(m.withColumnRenamed("c", "cs")
-                               .withColumnRenamed("root", "rs"), "cs")
-                    .groupBy(F.col("cd").alias("c")).agg(F.min("rs").alias("mr"))
-                )
-                nm = t(
-                    m.join(msgs, "c", "left")
-                    .select("c", F.least("root", F.coalesce("mr", "root")).alias("root"),
-                            F.coalesce(F.col("mr") < F.col("root"), F.lit(False))
-                            .alias("chg")), "m")
-                changed = nm.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-                m = nm.drop("chg")
-                if changed == 0:
-                    break
-            mapping = m.filter(F.col("c") != F.col("root"))
+            mapping = m.filter(F.col("vid") != F.col("comp")).select(
+                F.col("vid").alias("comp"), F.col("comp").alias("root"))
             new_state = (
                 state.unionByName(
                     lab.join(state.select("vid"), "vid", "left_anti"))
-                .join(mapping.withColumnRenamed("c", "comp"), "comp", "left")
+                .join(mapping, "comp", "left")
                 .select("vid", F.coalesce("root", F.col("comp")).alias("comp"))
             )
-            self._write(new_state)  # materializes before close() frees blocks
+            self._write(new_state)  # materializes before m's blocks are freed
         finally:
-            t.close()
+            free_truncated(m)
 
     # ---- streaming entry --------------------------------------------------
 

@@ -61,6 +61,68 @@ def test_pagerank_resume_equals_uninterrupted(spark, tmp_path):
     g.unpersist_all()
 
 
+class _DiesOnWrite:
+    """A file opened for writing whose first write raises: a crash while
+    the step number goes into LATEST."""
+
+    def __init__(self, f):
+        self._f = f
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self._f.close()
+        return False
+
+    def write(self, text):
+        raise OSError("injected crash while writing LATEST")
+
+
+def test_resume_after_crash_mid_latest_write(spark, tmp_path, monkeypatch):
+    """A crash while LATEST is being written must leave the previous
+    checkpoint resumable: the run resumes from it and reaches the values
+    and superstep count of an uninterrupted run."""
+    import builtins
+
+    from graphscope_spark.operators.pagerank import PageRankJob
+    from graphscope_spark.runtime import superstep
+    from graphscope_spark.runtime.superstep import SuperstepRunner
+
+    g = _graph(spark)
+    ckpt = str(tmp_path / "pr_crash")
+    latest_writes = []
+
+    def crashing_open(path, mode="r", *args, **kwargs):
+        f = builtins.open(path, mode, *args, **kwargs)
+        if "w" in mode and os.path.basename(path).startswith("LATEST"):
+            latest_writes.append(path)
+            if len(latest_writes) == 2:  # the step-4 checkpoint
+                return _DiesOnWrite(f)
+        return f
+
+    monkeypatch.setattr(superstep, "open", crashing_open, raising=False)
+    r1 = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=2)
+    with pytest.raises(OSError, match="injected crash"):
+        r1.run(PageRankJob(g, alpha=0.85, max_iter=100, tol=1e-9))
+    assert len(r1.history) == 3  # steps 1-3 done; step 4 died in LATEST
+    monkeypatch.undo()
+
+    r2 = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=2)
+    state, _ = r2.run(
+        PageRankJob(g, alpha=0.85, max_iter=100, tol=1e-9), resume=True)
+    assert r2.history[0].step == 3  # resumed from the step-2 checkpoint
+
+    r3 = SuperstepRunner(spark)
+    want, _ = r3.run(PageRankJob(g, alpha=0.85, max_iter=100, tol=1e-9))
+    got = {r["vid"]: r["rank"] for r in state.select("vid", "rank").collect()}
+    ref = {r["vid"]: r["rank"] for r in want.select("vid", "rank").collect()}
+    assert set(got) == set(ref)
+    assert all(abs(got[v] - ref[v]) < 1e-12 for v in ref)
+    assert 2 + len(r2.history) == len(r3.history)
+    g.unpersist_all()
+
+
 def test_resume_config_mismatch_refuses(spark, tmp_path):
     from graphscope_spark.operators.pagerank import PageRankJob
     from graphscope_spark.runtime.superstep import SuperstepRunner
