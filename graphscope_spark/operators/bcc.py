@@ -38,7 +38,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.bridges import _bfs_forest
@@ -50,10 +49,10 @@ from graphscope_spark.runtime.superstep import (Truncator, free_truncated,
 def _tree_with_pre(graph: LinkGraph, t: Truncator):
     """BFS forest + subtree size + per-tree preorder.
     Returns (tree_df(vid, depth, parent, sz, pre), max_depth)."""
-    tree, max_depth = _bfs_forest(graph, t)
-    tree = t(tree, "tree")
+    tree, max_depth = _bfs_forest(graph)
     # subtree sizes: leaf-to-root
-    state = t(tree.withColumn("sz", F.lit(1)), "sz")
+    state = t(tree.select("vid", "depth", "parent", F.lit(1).alias("sz")), "sz")
+    free_truncated(tree)
     for d in range(max_depth, 0, -1):
         up = (
             state.filter(F.col("depth") == d)
@@ -85,7 +84,7 @@ def _tree_with_pre(graph: LinkGraph, t: Truncator):
         pre = t(lvl, "pre_lvl")
         acc = t(acc.unionByName(pre), "pre")
     out = t(state.join(acc, "vid"), "tree_full")
-    for slot in ("tree", "sz", "kids", "pre_lvl"):
+    for slot in ("sz", "kids", "pre_lvl"):
         t.free(slot)
     return out, max_depth
 

@@ -35,28 +35,25 @@ from pyspark.sql import functions as F
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.wcc import wcc
-from graphscope_spark.runtime.superstep import Truncator
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                Truncator, free_truncated)
 
 
-def _bfs_forest(graph: LinkGraph, t: Truncator) -> tuple[DataFrame, int]:
-    """Deterministic BFS spanning forest: (vid, depth, parent); roots
-    (component min vid) have parent NULL. Returns (state, max_depth)."""
+def _bfs_forest(graph: LinkGraph) -> tuple[DataFrame, int]:
+    """Deterministic BFS spanning forest: (vid, depth, parent, chg); roots
+    (component min vid) have parent NULL. Returns (state, max_depth); the
+    state is a ``truncate`` result the caller frees."""
     und = graph.und_edges()  # graph-lifetime cached; do not persist/unpersist
     comp = wcc(graph)  # comp label = min vid of the component
-    state = t(comp.select(
-        "vid",
-        F.when(F.col("vid") == F.col("comp"), F.lit(0)).alias("depth"),
-        F.lit(None).cast("long").alias("parent")), "bfs")
-    depth = 0
-    while True:
-        depth += 1
+
+    def step(state: DataFrame, depth: int) -> DataFrame:
         frontier = state.filter(F.col("depth") == depth - 1).select("vid")
         cand = (
             und.join(frontier.withColumnRenamed("vid", "src"), "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.min("src").alias("newpar"))
         )
-        new_state = (
+        return (
             state.join(cand, "vid", "left")
             .select(
                 "vid",
@@ -67,19 +64,22 @@ def _bfs_forest(graph: LinkGraph, t: Truncator) -> tuple[DataFrame, int]:
                 (F.col("depth").isNull() & F.col("newpar").isNotNull()).alias("chg"),
             )
         )
-        new_state = t(new_state, "bfs")
-        grew = new_state.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        state = new_state.drop("chg")
-        if grew == 0:
-            break
-    return state, depth - 1
+
+    job = FixpointJob("bfs_forest", comp.select(
+        "vid",
+        F.when(F.col("vid") == F.col("comp"), F.lit(0)).alias("depth"),
+        F.lit(None).cast("long").alias("parent")), step)
+    runner = SuperstepRunner(graph.spark)
+    state, _ = runner.run(job)
+    # the last step grew nothing, so the deepest level is one step earlier
+    return state, len(runner.history) - 1
 
 
 def bridges(graph: LinkGraph) -> DataFrame:
     """(src, dst) canonical (src < dst) bridge edges of the simple
     undirected view."""
     t = Truncator()
-    tree, max_depth = _bfs_forest(graph, t)
+    tree, max_depth = _bfs_forest(graph)
     tree_edges = tree.filter(F.col("parent").isNotNull()).select(
         F.least("parent", "vid").alias("lo"),
         F.greatest("parent", "vid").alias("hi"),
@@ -120,6 +120,6 @@ def bridges(graph: LinkGraph) -> DataFrame:
                 F.greatest("parent", "vid").alias("dst"))
     )
     out = t(out, "out")
-    for slot in ("bfs", "sweep"):
-        t.free(slot)
+    t.free("sweep")
+    free_truncated(tree)
     return out

@@ -31,20 +31,19 @@ from pyspark.sql import functions as F
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.traversal import sample_pivots
 from graphscope_spark.operators.triangles import oriented_edges
-from graphscope_spark.runtime.superstep import Truncator
+from graphscope_spark.runtime.superstep import FixpointJob, SuperstepRunner
 
 
 def color(graph: LinkGraph, max_rounds: int = 10_000) -> DataFrame:
     """(vid, color) — deterministic greedy coloring; adjacent vertices
     always differ; colors are dense small ints per neighborhood."""
-    t = Truncator()
     # oriented src→dst has src ≻ dst: group by dst = collect higher nbrs
     hi = oriented_edges(graph)  # graph-lifetime cached view
-    state = t(graph.vertices.select("vid", F.lit(0).alias("c")), "state")
-    for _ in range(max_rounds):
+
+    def step(state: DataFrame, step_no: int) -> DataFrame:
         nbr_colors = (
-            hi.join(state.withColumnRenamed("vid", "src")
-                    .withColumnRenamed("c", "sc"), "src")
+            hi.join(state.select(F.col("vid").alias("src"),
+                                 F.col("c").alias("sc")), "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.collect_set("sc").alias("used"))
         )
@@ -52,16 +51,13 @@ def color(graph: LinkGraph, max_rounds: int = 10_000) -> DataFrame:
         mex = F.array_min(F.array_except(
             F.sequence(F.lit(0), F.size("used")), F.col("used")))
         newc = F.when(F.col("used").isNull(), F.lit(0)).otherwise(mex)
-        new_state = (
-            state.join(nbr_colors, "vid", "left")
-            .select("vid", newc.alias("c"), (newc != F.col("c")).alias("chg"))
-        )
-        new_state = t(new_state, "state")
-        changed = new_state.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        state = new_state.drop("chg")
-        if changed == 0:
-            break
-    else:
+        return (state.join(nbr_colors, "vid", "left")
+                .select("vid", newc.alias("c"), (newc != F.col("c")).alias("chg")))
+
+    job = FixpointJob("color", graph.vertices.select("vid", F.lit(0).alias("c")),
+                      step)
+    state, scalars = SuperstepRunner(graph.spark).run(job, max_steps=max_rounds)
+    if scalars["changed"]:
         # returning a mid-iteration state could violate the properness
         # guarantee in the docstring — fail loudly like msf/core_numbers
         raise RuntimeError(
@@ -76,7 +72,6 @@ def fluid_community(graph: LinkGraph, num_communities: int = 10,
     vertices no community reached (disconnected from every seed).
     ``seeds`` overrides the hash-sampled pivots with explicit seed
     vertices (index = position in the sorted list)."""
-    t = Truncator()
     if seeds is None:
         seeds = sample_pivots(graph, num_communities, seed)
     spark = graph.spark
@@ -84,10 +79,8 @@ def fluid_community(graph: LinkGraph, num_communities: int = 10,
         [(int(v), i) for i, v in enumerate(sorted(seeds))], "vid LONG, lab INT")
     sym = (graph.sym_edges() if graph.directed
            else graph.edges.select("src", "dst"))
-    state = t(
-        graph.vertices.select("vid").join(F.broadcast(seed_df), "vid", "left"),
-        "state")
-    for _ in range(max_rounds):
+
+    def step(state: DataFrame, step_no: int) -> DataFrame:
         cnt = state.filter(F.col("lab").isNotNull()) \
             .groupBy("lab").agg(F.count("*").alias("cnt"))
         labeled = state.filter(F.col("lab").isNotNull()) \
@@ -116,8 +109,8 @@ def fluid_community(graph: LinkGraph, num_communities: int = 10,
                | (F.col("bd") > F.coalesce("own_d", F.lit(0.0)) + 1e-10)),
             F.col("blab"),
         ).otherwise(F.col("oldlab"))
-        new_state = (
-            state.withColumnRenamed("lab", "oldlab")
+        return (
+            state.select("vid", F.col("lab").alias("oldlab"))
             .join(best, "vid", "left")
             .join(own, (F.col("vid") == F.col("_v"))
                   & (F.col("oldlab") == F.col("_l")), "left")
@@ -127,9 +120,10 @@ def fluid_community(graph: LinkGraph, num_communities: int = 10,
                  != F.coalesce(F.col("oldlab"), F.lit(-1))).alias("chg"),
             )
         )
-        new_state = t(new_state, "state")
-        changed = new_state.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        state = new_state.drop("chg")
-        if changed == 0:
-            break
+
+    job = FixpointJob(
+        "fluid_community",
+        graph.vertices.select("vid").join(F.broadcast(seed_df), "vid", "left"),
+        step)
+    state, _ = SuperstepRunner(spark).run(job, max_steps=max_rounds)
     return state.select("vid", F.col("lab").alias("community"))

@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import Truncator, free_truncated, truncate
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                Truncator, free_truncated)
 
 
 def _peel(edges: DataFrame, k: int, spark, t: Truncator | None = None) -> DataFrame:
@@ -90,7 +91,8 @@ def onion_layers(graph: LinkGraph) -> DataFrame:
     count ranked (the reference's check ``d.core == s.core && rank == -1``).
     """
     t = Truncator()
-    cores = truncate(core_numbers(graph))
+    core_state = _core_state(graph)
+    cores = core_state.select("vid", F.col("c").alias("core"))
     und = graph.und_edges()  # graph-lifetime cached; do not persist/unpersist
     cs = cores.select(F.col("vid").alias("src"), F.col("core").alias("score"))
     cd = cores.select(F.col("vid").alias("dst"), F.col("core").alias("dcore"))
@@ -137,7 +139,7 @@ def onion_layers(graph: LinkGraph) -> DataFrame:
         if i > 100_000:
             raise RuntimeError("onion_layers did not terminate")
     ce.unpersist()
-    free_truncated(cores)
+    free_truncated(core_state)
     return state.select("vid", "layer")
 
 
@@ -171,6 +173,40 @@ def _h_index(nbr: DataFrame) -> DataFrame:
     )
 
 
+def core_number_job(graph: LinkGraph) -> FixpointJob:
+    """The h-index core-number fixpoint as a runner job over state
+    (vid, c, chg); see ``core_numbers``."""
+    und = graph.und_edges()  # graph-lifetime cached; do not persist/unpersist
+    deg = und.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("c"))
+    init = (graph.vertices.select("vid").join(deg, "vid", "left")
+            .select("vid", F.coalesce("c", F.lit(0)).alias("c")))
+
+    def step(state: DataFrame, step_no: int) -> DataFrame:
+        nbr = (
+            und.join(state.select(F.col("vid").alias("src"),
+                                  F.col("c").alias("cs")), "src")
+            .join(state.select(F.col("vid").alias("dst"),
+                               F.col("c").alias("cd")), "dst")
+            .select(F.col("dst").alias("vid"),
+                    F.least("cs", "cd").alias("cnb"))
+        )
+        newc = F.least("c", F.coalesce("h", F.lit(0)))
+        return (state.join(_h_index(nbr), "vid", "left")
+                .select("vid", newc.alias("c"), (newc != F.col("c")).alias("chg")))
+
+    return FixpointJob("core_numbers", init, step)
+
+
+def _core_state(graph: LinkGraph) -> DataFrame:
+    """Run ``core_number_job`` to convergence; returns the runner's final
+    state (a ``truncate`` result)."""
+    state, scalars = SuperstepRunner(graph.spark).run(
+        core_number_job(graph), max_steps=10_000)
+    if scalars["changed"]:
+        raise RuntimeError("core_numbers did not converge")
+    return state
+
+
 def core_numbers(graph: LinkGraph) -> DataFrame:
     """(vid, core) for every vertex.
 
@@ -182,41 +218,7 @@ def core_numbers(graph: LinkGraph) -> DataFrame:
     ascending-peel implementation ran one peel loop PER core level
     (~1000 sequential Spark jobs on a dense 1000-vertex co-purchase
     graph); the fixpoint replaces that with O(rounds) joins."""
-    t = Truncator()
-    und = graph.und_edges()  # graph-lifetime cached; do not persist/unpersist
-    deg = und.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("c"))
-    state = t(
-        graph.vertices.select("vid").join(deg, "vid", "left")
-        .select("vid", F.coalesce("c", F.lit(0)).alias("c")), "state")
-    rounds = 0
-    while True:
-        rounds += 1
-        if rounds > 10_000:
-            raise RuntimeError("core_numbers did not converge")
-        nbr = (
-            und.join(state.select(F.col("vid").alias("src"),
-                                  F.col("c").alias("cs")), "src")
-            .join(state.select(F.col("vid").alias("dst"),
-                               F.col("c").alias("cd")), "dst")
-            .select(F.col("dst").alias("vid"),
-                    F.least("cs", "cd").alias("cnb"))
-        )
-        h = _h_index(nbr)
-        new_state = (
-            state.join(h, "vid", "left")
-            .select("vid",
-                    F.least("c", F.coalesce("h", F.lit(0))).alias("c"),
-                    (F.least("c", F.coalesce("h", F.lit(0))) != F.col("c"))
-                    .alias("chg"))
-        )
-        new_state = t(new_state, "state")
-        changed = new_state.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        state = new_state.drop("chg")
-        if changed == 0:
-            break
-    out = truncate(state.select("vid", F.col("c").alias("core")))
-    t.close()
-    return out
+    return _core_state(graph).select("vid", F.col("c").alias("core"))
 
 
 def degeneracy(graph: LinkGraph) -> int:

@@ -41,11 +41,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import SuperstepJob, SuperstepRunner
+from graphscope_spark.runtime.superstep import FixpointJob, SuperstepRunner
 
 
 @dataclass
@@ -58,51 +58,33 @@ class PregelProgram:
     undirected_messages: bool = True  # send along both directions
 
 
-class PregelJob(SuperstepJob):
-    name = "pregel_udf"
+class PregelJob(FixpointJob):
+    """A ``PregelProgram`` as a changed-count fixpoint: a vertex changes
+    when its value is not null-safe equal to the old one."""
 
     def __init__(self, graph: LinkGraph, program: PregelProgram):
-        self.graph = graph
         self.p = program
         self.msg_edges = (
             graph.sym_edges() if (program.undirected_messages and graph.directed)
             else graph.edges.select("src", "dst")
         )
+        super().__init__(
+            "pregel_udf",
+            graph.vertices.select("vid", program.init_value.alias("value")),
+            self._compute)
 
-    def config(self) -> dict:
-        return {"algo": self.name}
-
-    def init(self, spark: SparkSession):
-        state = self.graph.vertices.select(
-            "vid", self.p.init_value.alias("value"))
-        return state, {"changed": -1}
-
-    def step(self, state: DataFrame, step_no: int, scalars: dict):
+    def _compute(self, state: DataFrame, step_no: int) -> DataFrame:
         src_state = state.select(F.col("vid").alias("src"),
                                  F.col("value")).hint("shuffle_hash")
         enriched = self.msg_edges.join(src_state, "src")
         msgs = self.p.message(enriched)  # (dst, msg)
         agg = msgs.groupBy("dst").agg(self.p.combine("msg").alias("msg"))
-
-        obs = Observation()
-        new_state = (
+        new_value = self.p.update(state["value"], F.col("msg"))
+        return (
             state.join(agg.hint("shuffle_hash"), state["vid"] == agg["dst"], "left")
-            .select(
-                state["vid"],
-                self.p.update(state["value"], F.col("msg")).alias("value"),
-                (~self.p.update(state["value"], F.col("msg"))
-                 .eqNullSafe(state["value"])).alias("_chg"),
-            )
-            .observe(obs, F.sum(F.col("_chg").cast("long")).alias("c"))
-            .drop("_chg")
+            .select(state["vid"], new_value.alias("value"),
+                    (~new_value.eqNullSafe(state["value"])).alias("chg"))
         )
-
-        def finalize(st: DataFrame):
-            changed = obs.get["c"] or 0
-            return ({"changed": int(changed)},
-                    changed == 0 or step_no >= self.p.max_rounds)
-
-        return new_state, finalize
 
 
 def run_pregel(graph: LinkGraph, program: PregelProgram,

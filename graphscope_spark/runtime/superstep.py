@@ -24,23 +24,19 @@ leaves the previous checkpoint resumable.
 Both loop styles truncate through one primitive, ``truncate``: an eager
 ``localCheckpoint`` whose block RDD is read off the checkpointed plan (a
 ``LogicalRDD``) and freed by ``free_truncated`` once superseded, since
-``DataFrame.unpersist()`` never frees localCheckpoint blocks. Its one
-choice is what the truncated plan keeps:
-
-* ``keep_partitioning=True`` (the runner): plain ``localCheckpoint``
-  keeps ``outputPartitioning``, so the next step's joins against the
-  src-partitioned edge cache stay exchange-free (guarded by
-  tests/test_plan_quality.py). Runner steps are shallow, so the child
-  statistics the LogicalRDD carries do not compound measurably.
-* ``keep_partitioning=False`` (``Truncator`` driver loops): the carried
-  statistics are reset by rebuilding the DataFrame over the same blocks
-  with ``internalCreateDataFrame``. Spark's size-only estimator
-  multiplies child ``sizeInBytes`` through joins as arbitrary-precision
-  integers, so a loop whose state plan has J joins grows the carried
-  stat's bit-length ~J-fold per round (observed: 0.4 s -> 200 s per
-  Louvain round on a 120-vertex graph, 7 GB driver RSS, in
-  ``BigInteger.multiply`` under ``SizeInBytesOnlyStatsPlanVisitor``).
-  The rebuilt plan loses ``outputPartitioning``.
+``DataFrame.unpersist()`` never frees localCheckpoint blocks. The
+``LogicalRDD`` is rebuilt without the statistics it carries from the
+child plan: Spark's size-only estimator multiplies child ``sizeInBytes``
+through joins as arbitrary-precision integers, so a carried estimate
+compounds every round (observed: 0.4 s -> 200 s per Louvain round on a
+120-vertex graph in ``BigInteger.multiply``; a 3-join core-number step
+did not finish in 6 minutes on a 3000-vertex graph). The rebuilt plan
+falls back to ``defaultSizeInBytes`` and keeps whatever
+``outputPartitioning`` the checkpoint reports: ``hashpartitioning``
+with AQE off, which keeps the next step's joins against the
+src-partitioned edge cache exchange-free (tests/test_plan_quality.py),
+but ``UnknownPartitioning`` under AQE, ``build_session``'s default, so
+the state is re-exchanged every step.
 """
 
 from __future__ import annotations
@@ -51,7 +47,7 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -97,19 +93,52 @@ class SuperstepJob:
         return {}
 
 
-def truncate(df: DataFrame, keep_partitioning: bool = False) -> DataFrame:
-    """Eagerly materialize ``df`` and cut its lineage (module docstring:
-    ``keep_partitioning`` vs. stats reset). The result carries the
-    checkpoint's block RDD in ``_gs_blocks`` for ``free_truncated``."""
-    ckpt = df.localCheckpoint(eager=True)
-    jdf = ckpt._jdf
-    blocks = jdf.queryExecution().logical().rdd()
-    if not keep_partitioning:
-        spark = df.sparkSession
-        ckpt = DataFrame(spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False), spark)
-    ckpt._gs_blocks = blocks
-    return ckpt
+class FixpointJob(SuperstepJob):
+    """Changed-count fixpoint: ``step(state, step_no)`` returns the next
+    state with a boolean ``chg`` column (kept in the state, so a step can
+    use it as its frontier); the job converges once no row changed. The
+    count (scalar ``changed``) is observed on the runner's one
+    materialization, so a round costs no extra Spark action."""
+
+    def __init__(self, name: str, init_state: DataFrame,
+                 step: Callable[[DataFrame, int], DataFrame]):
+        self.name = name
+        self.init_state = init_state
+        self._step = step
+
+    def config(self) -> dict:
+        return {"algo": self.name}
+
+    def init(self, spark: SparkSession):
+        return self.init_state, {"changed": -1}
+
+    def step(self, state: DataFrame, step_no: int, scalars: dict):
+        obs = Observation()
+        new_state = self._step(state, step_no).observe(
+            obs, F.sum(F.col("chg").cast("long")).alias("c"))
+
+        def finalize(st: DataFrame):
+            changed = int(obs.get["c"] or 0)
+            return {"changed": changed}, changed == 0
+
+        return new_state, finalize
+
+
+def truncate(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage; the plan keeps the
+    checkpoint's partitioning but not its statistics (module docstring).
+    The result carries the checkpoint's block RDD in ``_gs_blocks`` for
+    ``free_truncated``."""
+    spark = df.sparkSession
+    jss, jvm = spark._jsparkSession, spark._jvm
+    lrdd = df.localCheckpoint(eager=True)._jdf.queryExecution().logical()
+    none = jvm.scala.Option.apply(None)
+    plan = lrdd.copy(lrdd.output(), lrdd.rdd(), lrdd.outputPartitioning(),
+                     lrdd.outputOrdering(), lrdd.isStreaming(), lrdd.stream(),
+                     jss, none, none)
+    out = DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, plan), spark)
+    out._gs_blocks = lrdd.rdd()
+    return out
 
 
 def free_truncated(df: DataFrame | None) -> None:
@@ -283,7 +312,7 @@ class SuperstepRunner:
                 # ~3^k with iteration k (SURVEY.md §7.3 risk #1). The
                 # checkpoint materializes the plan ONCE; the job's finalize
                 # then computes its scalar aggregates from the blocks.
-                new_state = truncate(raw_state, keep_partitioning=True)
+                new_state = truncate(raw_state)
                 scalars, converged = finalize(new_state)
                 # the previous state is a checkpoint (blocks) or the persisted
                 # init/reloaded frame (Dataset cache)

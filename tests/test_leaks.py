@@ -53,7 +53,9 @@ def _mk(spark, n=60, m=240, seed=8):
 
 @pytest.mark.parametrize("algo", ["scc", "louvain", "betweenness",
                                   "core_numbers", "voterank", "mis",
-                                  "ktruss", "bcc"])
+                                  "ktruss", "bcc", "color",
+                                  "fluid_community", "bridges", "k_center",
+                                  "onion_layers"])
 def test_loop_algorithms_release_checkpoints(spark, algo):
     import graphscope_spark as gs
 
@@ -75,6 +77,17 @@ def test_loop_algorithms_release_checkpoints(spark, algo):
         gs.ktruss(g, 3).count()
     elif algo == "bcc":
         gs.biconnected_components(g).count()
+    elif algo == "color":
+        gs.color(g).count()
+    elif algo == "fluid_community":
+        # this graph never settles: the full 100 rounds take ~60 s
+        gs.fluid_community(g, num_communities=3, max_rounds=5).count()
+    elif algo == "bridges":
+        gs.bridges(g).count()
+    elif algo == "k_center":
+        gs.k_center(g, k=3)[1].count()
+    elif algo == "onion_layers":
+        gs.onion_layers(g).count()
     after = _persistent_count(spark)
     # a loop of k iterations used to leak ~k block sets; now at most a
     # handful of live result/graph-cache entries may remain

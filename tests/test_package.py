@@ -75,13 +75,13 @@ def test_run_algo_graphar_input(tmp_path, spark):
 
 def test_lineage_truncation_lives_in_superstep_runtime():
     """localCheckpoint, the persistent-RDD registry and the stats-reset
-    constructor are used only by the runtime's one truncation primitive:
+    plan rebuild (``ofRows``) are used only by the runtime's one truncation primitive:
     a second reclamation path once diffed the registry and unpersisted
     the graph's own caches along with its checkpoint blocks."""
     pkg = ROOT / "graphscope_spark"
     allowed = {"graphscope_spark/runtime/superstep.py"}
     for token in ("localCheckpoint(", "getPersistentRDDs",
-                  "internalCreateDataFrame"):
+                  "ofRows("):
         users = {p.relative_to(ROOT).as_posix() for p in pkg.rglob("*.py")
                  if token in p.read_text()}
         assert users <= allowed, f"{token} used outside the runtime: {users}"

@@ -88,31 +88,48 @@ def test_pagerank_push_step_single_exchange_no_state_broadcast(spark):
 
 
 def test_truncate_stats_reset(spark):
-    """Driver-loop truncation resets the statistics the checkpoint
-    carries. A plain localCheckpoint keeps the child plan's estimate,
-    which the size-only estimator multiplies through every join, so it
-    compounds round after round as a BigInt (minutes of planning per
-    Louvain round); the reset plan falls back to defaultSizeInBytes."""
+    """Truncation resets the statistics the checkpoint carries. A plain
+    localCheckpoint keeps the child plan's estimate, which the size-only
+    estimator multiplies through every join, so it compounds round after
+    round as a BigInt (minutes of planning per Louvain round); the
+    truncated plan falls back to defaultSizeInBytes, for driver loops and
+    runner states alike, and still reports the checkpoint's partitioning
+    (hashpartitioning with AQE off)."""
     from pyspark.sql import functions as F
 
-    from graphscope_spark.runtime.superstep import free_truncated, truncate
-
-    t = spark.range(1000).withColumn("k", F.col("id") % 10)
-    df = t
-    for i in range(4):
-        df = df.join(t.withColumnRenamed("k", f"k{i}"), "id")
+    from graphscope_spark.operators.wcc import WCCJob
+    from graphscope_spark.runtime.superstep import (SuperstepRunner,
+                                                    free_truncated, truncate)
 
     def size_in_bytes(d):
         return int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
     default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
-    kept = truncate(df, keep_partitioning=True)
+    t = spark.range(1000).withColumn("k", F.col("id") % 10)
+    df = t
+    for i in range(4):
+        df = df.join(t.withColumnRenamed("k", f"k{i}"), "id")
     reset = truncate(df)
-    assert size_in_bytes(kept) > default  # what the reset exists to drop
     assert size_in_bytes(reset) == default
     assert reset.count() == 1000
-    free_truncated(kept)
     free_truncated(reset)
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        part = truncate(spark.range(100).repartition(8, "id"))
+        assert part._jdf.queryExecution().logical().outputPartitioning() \
+            .toString().startswith("hashpartitioning(id")
+        assert size_in_bytes(part) == default
+        free_truncated(part)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+    # a runner state does not carry its steps' join estimates either
+    g = _mk(spark, n=300, m=1200, seed=42)
+    state, _ = SuperstepRunner(spark).run(WCCJob(g), max_steps=2)
+    assert size_in_bytes(state) == default
+    free_truncated(state)
+    g.unpersist_all()
 
 
 def test_triangle_plan_no_cartesian(spark):

@@ -123,6 +123,33 @@ def test_resume_after_crash_mid_latest_write(spark, tmp_path, monkeypatch):
     g.unpersist_all()
 
 
+def test_core_numbers_resume_equals_uninterrupted(spark, tmp_path):
+    """A former driver-loop operator resumes mid-run like PageRank: the
+    core-number fixpoint stopped after 2 steps continues from its
+    checkpoint to the rows and step count of an uninterrupted run."""
+    from graphscope_spark.operators.cores import core_number_job
+    from graphscope_spark.runtime.superstep import SuperstepRunner
+
+    g = _graph(spark)
+    ckpt = str(tmp_path / "core_ckpt")
+    r1 = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=2)
+    r1.run(core_number_job(g), max_steps=2)
+    assert r1.latest_checkpoint()["step"] == 2
+
+    r2 = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=2)
+    state, scalars = r2.run(core_number_job(g), resume=True)
+    assert r2.history[0].step == 3 and scalars["changed"] == 0
+
+    r3 = SuperstepRunner(spark)
+    want, _ = r3.run(core_number_job(g))
+    assert len(r3.history) > 2  # the first run really stopped mid-fixpoint
+    assert 2 + len(r2.history) == len(r3.history)
+    got = {r["vid"]: r["c"] for r in state.select("vid", "c").collect()}
+    ref = {r["vid"]: r["c"] for r in want.select("vid", "c").collect()}
+    assert got == ref
+    g.unpersist_all()
+
+
 def test_resume_config_mismatch_refuses(spark, tmp_path):
     from graphscope_spark.operators.pagerank import PageRankJob
     from graphscope_spark.runtime.superstep import SuperstepRunner
