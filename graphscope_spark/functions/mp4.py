@@ -45,7 +45,6 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from graphscope_spark.functions.codecs import truncation_guard
 

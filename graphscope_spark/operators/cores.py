@@ -29,7 +29,7 @@ from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
                                                 Truncator, free_truncated)
 
 
-def _peel(edges: DataFrame, k: int, spark, t: Truncator | None = None) -> DataFrame:
+def _peel(edges: DataFrame, k: int) -> DataFrame:
     """Remove vertices with degree < k until stable; returns the surviving
     symmetric edge set. ``edges`` must be the symmetric simple view.
 
@@ -43,7 +43,7 @@ def _peel(edges: DataFrame, k: int, spark, t: Truncator | None = None) -> DataFr
     would evict the shared cache for every later operator on the graph;
     pruned rounds are checkpointed by the Truncator, which also reclaims
     each superseded round's blocks."""
-    t = t or Truncator()
+    t = Truncator()
     while True:
         deg = edges.groupBy("src").agg(F.count("*").alias("deg")).persist(
             StorageLevel.MEMORY_AND_DISK)
@@ -70,7 +70,7 @@ def kcore(graph: LinkGraph, k: int) -> DataFrame:
     assigns them core 0."""
     if k <= 0:
         return graph.vertices.select("vid")
-    surv = _peel(graph.und_edges(), k, graph.spark)
+    surv = _peel(graph.und_edges(), k)
     return surv.select(F.col("src").alias("vid")).distinct()
 
 
@@ -90,24 +90,21 @@ def onion_layers(graph: LinkGraph) -> DataFrame:
     SAME-core neighbors of newly ranked vertices decrement d by the
     count ranked (the reference's check ``d.core == s.core && rank == -1``).
     """
-    t = Truncator()
     core_state = _core_state(graph)
     cores = core_state.select("vid", F.col("c").alias("core"))
     und = graph.und_edges()  # graph-lifetime cached; do not persist/unpersist
     cs = cores.select(F.col("vid").alias("src"), F.col("core").alias("score"))
     cd = cores.select(F.col("vid").alias("dst"), F.col("core").alias("dcore"))
-    ce = und.join(cs, "src").join(cd, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     d0 = (
-        ce.filter(F.col("score") >= F.col("dcore"))
+        und.join(cs, "src").join(cd, "dst")
+        .filter(F.col("score") >= F.col("dcore"))
         .groupBy(F.col("dst").alias("vid")).agg(F.count("*").alias("d"))
     )
-    state = t(
-        cores.join(d0, "vid", "left")
-        .select("vid", "core", F.coalesce("d", F.lit(0)).alias("d"),
-                F.lit(-1).alias("layer")),
-        "state")
-    i = 0
-    while True:
+    init = (cores.join(d0, "vid", "left")
+            .select("vid", "core", F.coalesce("d", F.lit(0)).alias("d"),
+                    F.lit(-1).alias("layer")))
+
+    def step(state: DataFrame, step_no: int) -> DataFrame:
         newly = state.filter((F.col("layer") == -1) & (F.col("d") <= F.col("core"))) \
             .select("vid", F.col("core").alias("ncore"))
         cnt = (
@@ -115,7 +112,9 @@ def onion_layers(graph: LinkGraph) -> DataFrame:
             .groupBy(F.col("dst").alias("vid"), F.col("ncore"))
             .agg(F.count("*").alias("dec"))
         )
-        new_state = (
+        layer = (F.when(F.col("_n").isNotNull(), F.lit(step_no - 1))
+                 .otherwise(state["layer"]))
+        return (
             state
             .join(newly.select("vid").withColumn("_n", F.lit(True)), "vid", "left")
             .join(cnt, (state["vid"] == cnt["vid"])
@@ -126,20 +125,15 @@ def onion_layers(graph: LinkGraph) -> DataFrame:
                                      & F.col("_n").isNull(),
                                      F.coalesce("dec", F.lit(0)))
                  .otherwise(F.lit(0))).alias("d"),
-                F.when(F.col("_n").isNotNull(), F.lit(i))
-                .otherwise(state["layer"]).alias("layer"),
+                layer.alias("layer"), (layer == -1).alias("chg"),
             )
         )
-        new_state = t(new_state, "state")
-        remaining = new_state.filter(F.col("layer") == -1).count()
-        state = new_state
-        i += 1
-        if remaining == 0:
-            break
-        if i > 100_000:
-            raise RuntimeError("onion_layers did not terminate")
-    ce.unpersist()
+
+    state, scalars = SuperstepRunner(graph.spark).run(
+        FixpointJob("onion_layers", init, step), max_steps=100_000)
     free_truncated(core_state)
+    if scalars["changed"]:
+        raise RuntimeError("onion_layers did not terminate")
     return state.select("vid", "layer")
 
 

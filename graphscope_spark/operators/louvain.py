@@ -28,7 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import Truncator, free_truncated, truncate
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                Truncator, free_truncated,
+                                                truncate)
 
 
 def _sym_weighted(graph: LinkGraph, weight_col: str | None) -> DataFrame:
@@ -68,20 +70,20 @@ def modularity(edges_sym: DataFrame, labels: DataFrame,
 
 
 def _local_moves(edges: DataFrame, comm: DataFrame, m2: float,
-                 max_rounds: int, spark, t: Truncator | None = None) -> DataFrame:
-    """Synchronous local-move phase; returns (vid, comm)."""
+                 max_rounds: int) -> DataFrame:
+    """Synchronous local-move phase; returns the runner's final
+    (vid, comm, chg) state, a ``truncate`` result."""
     # vertex strength k_i INCLUDES self-loop weight (a super-vertex's
     # self-loop is its community's internal mass — the aggregated
     # symmetric edge (c,c) already carries both directions); only the
     # move-candidate edges (w_ic terms) exclude self-loops, since that
     # weight moves with the vertex and cancels in the argmax
-    t = t or Truncator()
     k = edges.groupBy("src").agg(F.sum("w").alias("k")) \
         .withColumnRenamed("src", "vid").persist(StorageLevel.MEMORY_AND_DISK)
     edges = edges.filter(F.col("src") != F.col("dst"))
-    comm = t(comm, "comm")
-    for rnd in range(1, max_rounds + 1):
-        lab = comm
+
+    def step(state: DataFrame, rnd: int) -> DataFrame:
+        lab = state.select("vid", "comm")
         cs = lab.withColumnRenamed("vid", "src").withColumnRenamed("comm", "cs")
         cd = lab.withColumnRenamed("vid", "dst").withColumnRenamed("comm", "cd")
         e = edges.join(cs, "src").join(cd, "dst")
@@ -122,14 +124,12 @@ def _local_moves(edges: DataFrame, comm: DataFrame, m2: float,
             (F.col("best_c") != F.col("cs"))
             & (F.pmod(F.col("src") + F.lit(rnd), F.lit(2)) == 0)
         ).select(F.col("src").alias("vid"), F.col("best_c").alias("newc"))
-        n_moves = moves.count()
-        if n_moves == 0:
-            break
-        comm = t(
-            comm.join(moves, "vid", "left")
-            .select("vid", F.coalesce("newc", F.col("comm")).alias("comm")),
-            "comm",
-        )
+        return (lab.join(moves, "vid", "left")
+                .select("vid", F.coalesce("newc", F.col("comm")).alias("comm"),
+                        F.col("newc").isNotNull().alias("chg")))
+
+    comm, _ = SuperstepRunner(edges.sparkSession).run(
+        FixpointJob("louvain_local_moves", comm, step), max_steps=max_rounds)
     k.unpersist()
     return comm
 
@@ -140,7 +140,6 @@ def louvain(graph: LinkGraph, weight_col: str | None = None,
     """(vid, community) — community relabeled to the min member vid for
     determinism. Multi-level: local moves → aggregate → repeat while
     modularity improves by > min_gain."""
-    spark = graph.spark
     edges = _sym_weighted(graph, weight_col).persist(StorageLevel.MEMORY_AND_DISK)
     m2 = edges.agg(F.sum("w")).first()[0]
     if not m2:
@@ -154,7 +153,7 @@ def louvain(graph: LinkGraph, weight_col: str | None = None,
     for _level in range(max_levels):
         verts = lvl_edges.select(F.col("src").alias("vid")).distinct()
         comm = _local_moves(lvl_edges, verts.select("vid", F.col("vid").alias("comm")),
-                            m2, max_rounds, spark, t)
+                            m2, max_rounds)
         # compose onto the original mapping (manual frees — on the
         # no-improvement break the OLD mapping may be the keeper)
         new_mapping = truncate(
@@ -171,6 +170,7 @@ def louvain(graph: LinkGraph, weight_col: str | None = None,
                 mapping = new_mapping
             else:
                 free_truncated(new_mapping)
+            free_truncated(comm)
             break
         free_truncated(mapping)
         mapping = new_mapping
@@ -185,12 +185,12 @@ def louvain(graph: LinkGraph, weight_col: str | None = None,
             .agg(F.sum("w").alias("w"))
         )
         lvl_edges = t(lvl_edges, "lvl_edges")
+        free_truncated(comm)
     # deterministic labels: min original vid per community
     rep = mapping.groupBy("comm").agg(F.min("vid").alias("community"))
     out = mapping.join(rep, "comm").select("vid", "community")
     edges.unpersist()
     t.free("lvl_edges")
-    t.free("comm")
     return out
 
 

@@ -48,7 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import Truncator
+from graphscope_spark.runtime.superstep import (FixpointJob, StepMetrics,
+                                                SuperstepRunner, Truncator)
 
 
 def _sym(graph: LinkGraph) -> DataFrame:
@@ -60,19 +61,17 @@ def _sym(graph: LinkGraph) -> DataFrame:
 def mis(graph: LinkGraph) -> DataFrame:
     """(vid, in_mis) — a maximal independent set, priority (deg, vid)
     ascending (deterministic; strictly unique even for sparse vids)."""
-    t = Truncator()
     sym = _sym(graph).select("src", "dst").distinct() \
         .persist(StorageLevel.MEMORY_AND_DISK)
     deg = sym.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
-    state = t(
+    init = (
         graph.vertices.select("vid").join(deg, "vid", "left")
         .select("vid",
                 F.struct(F.coalesce("deg", F.lit(0)).alias("deg"),
                          F.col("vid").alias("vid")).alias("r"),
-                F.lit(False).alias("in_mis"), F.lit(False).alias("excluded")),
-        "state")
-    prev_remaining = -1
-    while True:
+                F.lit(False).alias("in_mis"), F.lit(False).alias("excluded")))
+
+    def step(state: DataFrame, step_no: int) -> DataFrame:
         active = state.filter(~F.col("in_mis") & ~F.col("excluded"))
         # min active-neighbor priority per active vertex
         nbr_min = (
@@ -89,26 +88,25 @@ def mis(graph: LinkGraph) -> DataFrame:
             sym.join(winners.withColumnRenamed("vid", "src"), "src", "left_semi")
             .select(F.col("dst").alias("vid")).distinct()
         )
-        new_state = (
+        in_mis = F.col("in_mis") | F.col("_w").isNotNull()
+        excluded = F.col("excluded") | (F.col("_l").isNotNull() & F.col("_w").isNull())
+        return (
             state
             .join(winners.withColumn("_w", F.lit(True)), "vid", "left")
             .join(losers.withColumn("_l", F.lit(True)), "vid", "left")
-            .select(
-                "vid", "r",
-                (F.col("in_mis") | F.col("_w").isNotNull()).alias("in_mis"),
-                (F.col("excluded")
-                 | (F.col("_l").isNotNull() & F.col("_w").isNull())).alias("excluded"),
-                (F.col("_w").isNotNull() | F.col("_l").isNotNull()).alias("chg"),
-            )
+            .select("vid", "r", in_mis.alias("in_mis"),
+                    excluded.alias("excluded"),
+                    (~in_mis & ~excluded).alias("chg"))
         )
-        new_state = t(new_state, "state")
-        remaining = new_state.filter(~F.col("in_mis") & ~F.col("excluded")).count()
-        state = new_state.drop("chg")
-        if remaining == 0:
-            break
-        if remaining == prev_remaining:  # unique priorities guarantee progress
+
+    runner = SuperstepRunner(graph.spark)
+
+    def no_progress(m: StepMetrics) -> None:
+        # unique priorities guarantee progress
+        if len(runner.history) > 1 and runner.history[-2].scalars == m.scalars:
             raise RuntimeError("mis() made no progress — priority collision?")
-        prev_remaining = remaining
+
+    state, _ = runner.run(FixpointJob("mis", init, step), on_step=no_progress)
     sym.unpersist()
     return state.select("vid", "in_mis")
 
@@ -118,14 +116,10 @@ def maximal_matching(graph: LinkGraph,
     """(vid, mate) — mate NULL when unmatched; mutual-max-proposal
     rounds until maximal (or until ``max_rounds``, giving a deterministic
     partial matching — the bounded-round contract variant)."""
-    t = Truncator()
     sym = _sym(graph).select("src", "dst").distinct() \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    state = t(graph.vertices.select(
-        "vid", F.lit(None).cast("long").alias("mate")), "state")
-    rnd = 0
-    while max_rounds is None or rnd < max_rounds:
-        rnd += 1
+
+    def step(state: DataFrame, step_no: int) -> DataFrame:
         un = state.filter(F.col("mate").isNull()).select("vid")
         live = (
             sym.join(un.withColumnRenamed("vid", "src"), "src", "left_semi")
@@ -139,13 +133,14 @@ def maximal_matching(graph: LinkGraph,
                   (F.col("a.p") == F.col("b.vid")) & (F.col("b.p") == F.col("a.vid")))
             .select(F.col("a.vid").alias("vid"), F.col("a.p").alias("newmate"))
         )
-        matched = mutual.count()
-        if matched == 0:
-            break
-        state = t(
-            state.join(mutual, "vid", "left")
-            .select("vid", F.coalesce("newmate", "mate").alias("mate")),
-            "state")
+        return (state.join(mutual, "vid", "left")
+                .select("vid", F.coalesce("newmate", "mate").alias("mate"),
+                        F.col("newmate").isNotNull().alias("chg")))
+
+    init = graph.vertices.select("vid", F.lit(None).cast("long").alias("mate"))
+    state, _ = SuperstepRunner(graph.spark).run(
+        FixpointJob("maximal_matching", init, step),
+        max_steps=1_000_000 if max_rounds is None else max_rounds)
     sym.unpersist()
     return state.select("vid", "mate")
 

@@ -165,11 +165,6 @@ def acyclic_triangle_count(graph: LinkGraph) -> int:
     return n
 
 
-def _order_key(graph: LinkGraph, col: str):
-    deg = graph.und_degrees()
-    return deg.select(F.col("vid").alias(col), F.col("deg").alias(f"deg_{col}"))
-
-
 def cyclic_triangle_count(graph: LinkGraph) -> int:
     """Cyclic directed triangles s→d→x→s, counted once at the edge whose
     missing corner x is the (degree, id)-max (reference

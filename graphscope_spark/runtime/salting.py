@@ -15,7 +15,7 @@ apps/clustering/triangles.h:129-131).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

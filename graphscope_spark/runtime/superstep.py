@@ -45,6 +45,8 @@ import json
 import os
 import time
 from dataclasses import dataclass
+from functools import reduce
+from operator import xor
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -94,11 +96,11 @@ class SuperstepJob:
 
 
 class FixpointJob(SuperstepJob):
-    """Changed-count fixpoint: ``step(state, step_no)`` returns the next
-    state with a boolean ``chg`` column (kept in the state, so a step can
-    use it as its frontier); the job converges once no row changed. The
-    count (scalar ``changed``) is observed on the runner's one
-    materialization, so a round costs no extra Spark action."""
+    """Live-row fixpoint: ``step(state, step_no)`` returns the next state
+    with a boolean ``chg`` column (kept, so a step can use it as its
+    frontier) marking a row still live: changed this round, or not yet
+    decided. The job converges once no row is live; the count (scalar
+    ``changed``) is observed on the runner's one materialization."""
 
     def __init__(self, name: str, init_state: DataFrame,
                  step: Callable[[DataFrame, int], DataFrame]):
@@ -189,6 +191,14 @@ def _replace_file(path: str, text: str) -> None:
     os.replace(tmp, path)
 
 
+def _digest(df: DataFrame) -> tuple:
+    """(rows, checksum) aggregates. bit_xor of xxhash64 is order-independent
+    and cannot overflow (ANSI mode is on in Spark 4; sum(xxhash64) overflows
+    long), so the XOR of per-partition checksums is the whole-state one."""
+    return (F.count("*").alias("rows"),
+            F.bit_xor(F.xxhash64(*map(F.col, df.columns))).alias("checksum"))
+
+
 @dataclass
 class StepMetrics:
     step: int
@@ -223,15 +233,8 @@ class SuperstepRunner:
         state.write.mode("overwrite").parquet(spath)
         reloaded = self.spark.read.parquet(spath).persist(StorageLevel.MEMORY_AND_DISK)
 
-        cols = [F.col(c) for c in reloaded.columns]
-        # bit_xor is order-independent and cannot overflow (ANSI mode is
-        # on by default in Spark 4; sum(xxhash64) overflows long).
-        rows = (
-            reloaded.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"),
-                 F.bit_xor(F.xxhash64(*cols)).alias("checksum"))
-            .collect()
-        )
+        rows = reloaded.groupBy(F.spark_partition_id().alias("pid")) \
+            .agg(*_digest(reloaded)).collect()
         per_part = [
             {"pid": r["pid"], "rows": r["rows"], "checksum": str(r["checksum"])}
             for r in sorted(rows, key=lambda r: r["pid"])
@@ -277,7 +280,8 @@ class SuperstepRunner:
     ) -> tuple[DataFrame, dict]:
         """Run ``job`` to convergence (or ``max_steps``). With
         ``resume=True`` and a readable manifest, restart from the last
-        checkpointed superstep instead of ``init``."""
+        checkpointed superstep instead of ``init``; a state whose rows or
+        checksum differ from the manifest raises ``ValueError``."""
         self.history = []
         start_step = 0
         last_ckpt: int | None = None
@@ -291,6 +295,15 @@ class SuperstepRunner:
                 )
             state = self.spark.read.parquet(manifest["state_path"]).persist(
                 StorageLevel.MEMORY_AND_DISK)
+            parts = manifest["per_partition"]
+            want = (sum(p["rows"] for p in parts),
+                    reduce(xor, (int(p["checksum"]) for p in parts), 0))
+            got = state.agg(*_digest(state)).first()
+            if (got["rows"], got["checksum"] or 0) != want:
+                state.unpersist()
+                raise ValueError(
+                    f"corrupted checkpoint {manifest['state_path']}: (rows, "
+                    f"checksum) {tuple(got)} != manifest's {want}")
             scalars = manifest["scalars"]
             start_step = manifest["step"]
             last_ckpt = manifest["step"]

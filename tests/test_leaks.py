@@ -55,7 +55,7 @@ def _mk(spark, n=60, m=240, seed=8):
                                   "core_numbers", "voterank", "mis",
                                   "ktruss", "bcc", "color",
                                   "fluid_community", "bridges", "k_center",
-                                  "onion_layers"])
+                                  "onion_layers", "maximal_matching"])
 def test_loop_algorithms_release_checkpoints(spark, algo):
     import graphscope_spark as gs
 
@@ -88,6 +88,8 @@ def test_loop_algorithms_release_checkpoints(spark, algo):
         gs.k_center(g, k=3)[1].count()
     elif algo == "onion_layers":
         gs.onion_layers(g).count()
+    elif algo == "maximal_matching":
+        gs.maximal_matching(g).count()
     after = _persistent_count(spark)
     # a loop of k iterations used to leak ~k block sets; now at most a
     # handful of live result/graph-cache entries may remain

@@ -32,6 +32,56 @@ def g50(spark):
     return g, vertices, edges, und
 
 
+def _sim_mis(vertices, und):
+    """Synchronous rule of ``mis``: each round every undecided vertex
+    whose (deg, vid) is below all undecided neighbours' joins the set,
+    and the winners' neighbours are excluded."""
+    r = {v: (len(und[v]), v) for v in vertices}
+    undecided, sel = set(vertices), set()
+    while undecided:
+        winners = {v for v in undecided
+                   if all(r[v] < r[u] for u in und[v] & undecided)}
+        sel |= winners
+        undecided -= winners | {u for w in winners for u in und[w]}
+    return {v: v in sel for v in vertices}
+
+
+def _sim_matching(vertices, und):
+    """Synchronous rule of ``maximal_matching``: every unmatched vertex
+    proposes to its max-id unmatched neighbour; mutual proposals match."""
+    mate = dict.fromkeys(vertices)
+    while True:
+        un = {v for v in vertices if mate[v] is None}
+        props = {v: max(und[v] & un) for v in un if und[v] & un}
+        mutual = {v: p for v, p in props.items() if props.get(p) == v}
+        if not mutual:
+            return mate
+        mate.update(mutual)
+
+
+def _sim_onion(vertices, und):
+    """The rule in the ``onion_layers`` docstring, on peel-order core
+    numbers."""
+    deg, alive, core, k = {v: len(und[v]) for v in vertices}, set(vertices), {}, 0
+    while alive:
+        v = min(alive, key=lambda x: (deg[x], x))
+        k = max(k, deg[v])
+        core[v] = k
+        alive.remove(v)
+        for u in und[v] & alive:
+            deg[u] -= 1
+    d = {v: sum(1 for u in und[v] if core[u] >= core[v]) for v in vertices}
+    layer, i = {}, 0
+    while len(layer) < len(vertices):
+        newly = {v for v in vertices if v not in layer and d[v] <= core[v]}
+        for v in vertices:
+            if v not in layer and v not in newly:
+                d[v] -= sum(1 for u in und[v] & newly if core[u] == core[v])
+        layer.update(dict.fromkeys(newly, i))
+        i += 1
+    return layer
+
+
 def test_mis(spark, g50):
     from graphscope_spark import mis
 
@@ -45,9 +95,10 @@ def test_mis(spark, g50):
     for v in vertices:
         if v not in sel:
             assert und[v] & sel, v
-    # deterministic
+    # deterministic, and exactly the synchronous (deg, vid) rule
     got2 = {r["vid"]: r["in_mis"] for r in mis(g).collect()}
     assert got == got2
+    assert got == _sim_mis(vertices, und)
 
 
 def test_maximal_matching_and_edge_cover(spark, g50):
@@ -55,6 +106,7 @@ def test_maximal_matching_and_edge_cover(spark, g50):
 
     g, vertices, edges, und = g50
     mm = {r["vid"]: r["mate"] for r in maximal_matching(g).collect()}
+    assert mm == _sim_matching(vertices, und)
     matched = {v for v, m in mm.items() if m is not None}
     for v in matched:
         assert mm[mm[v]] == v  # symmetric
@@ -165,3 +217,4 @@ def test_densest_and_onion(spark, g50):
     # (sanity: every vertex got a layer and layers are deterministic)
     layers2 = {r["vid"]: r["layer"] for r in onion_layers(g).collect()}
     assert layers == layers2
+    assert layers == _sim_onion(vertices, und)

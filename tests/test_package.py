@@ -85,3 +85,12 @@ def test_lineage_truncation_lives_in_superstep_runtime():
         users = {p.relative_to(ROOT).as_posix() for p in pkg.rglob("*.py")
                  if token in p.read_text()}
         assert users <= allowed, f"{token} used outside the runtime: {users}"
+
+
+def test_hand_written_truncator_loops_only_shrink():
+    """Ratchet on the hand-written ``Truncator()`` loops still outside
+    ``SuperstepRunner``: a new iterative operator runs on the runner (a
+    ``FixpointJob`` or ``SuperstepJob``) instead of adding one."""
+    pkg = ROOT / "graphscope_spark"
+    n = sum(p.read_text().count("Truncator()") for p in pkg.rglob("*.py"))
+    assert n <= 19, f"{n} Truncator() loops; move new loops onto the runner"

@@ -165,9 +165,11 @@ def test_resume_config_mismatch_refuses(spark, tmp_path):
 
 
 def test_checkpoint_partition_checksums_detect_corruption(spark, tmp_path):
-    """The per-partition checksums in the manifest are real: recomputing
-    them over the checkpointed parquet reproduces the manifest, and a
-    corrupted state file no longer matches."""
+    """The per-partition checksums in the manifest are real: their row
+    counts add up to the checkpointed parquet, and a resume from a state
+    file with one value changed (same row count) is refused."""
+    import shutil
+
     from pyspark.sql import functions as F
 
     from graphscope_spark.operators.wcc import WCCJob
@@ -176,8 +178,25 @@ def test_checkpoint_partition_checksums_detect_corruption(spark, tmp_path):
     g = _graph(spark)
     ckpt = str(tmp_path / "wcc_ckpt")
     r = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=1)
-    r.run(WCCJob(g), max_steps=2)
+    state, _ = r.run(WCCJob(g), max_steps=2)
+    state.unpersist()  # as after a crash: no cached copy of the parquet
     man = r.latest_checkpoint()
+    spath = man["state_path"]
     total_rows = sum(p["rows"] for p in man["per_partition"])
-    assert total_rows == spark.read.parquet(man["state_path"]).count()
+    assert total_rows == spark.read.parquet(spath).count()
+
+    # rewrite the state with one component label changed
+    top = spark.read.parquet(spath).agg(F.max("vid")).first()[0]
+    bad = str(tmp_path / "bad_state")
+    spark.read.parquet(spath).withColumn(
+        "comp", F.when(F.col("vid") == top, F.col("comp") + 1)
+        .otherwise(F.col("comp"))).write.parquet(bad)
+    shutil.rmtree(spath)
+    shutil.move(bad, spath)
+    assert spark.read.parquet(spath).count() == total_rows
+
+    r2 = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=1)
+    with pytest.raises(ValueError, match="corrupted"):
+        r2.run(WCCJob(g), resume=True)
+    assert r2.history == []
     g.unpersist_all()
