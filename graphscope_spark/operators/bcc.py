@@ -31,7 +31,9 @@ ARBITRARY rooted spanning forest (here: the deterministic BFS forest):
   in tests against the XOR-sweep ``bridges`` operator).
 
 Every step is O(depth) rounds of joins/aggregations over the stable
-edge table — no DFS, no per-vertex recursion, no global window.
+edge table — no DFS, no per-vertex recursion, no global window. Each
+level loop is a ``FixpointJob`` of max_depth steps (bridges' ``_sweep_up``
+for the two leaf-to-root sweeps).
 """
 
 from __future__ import annotations
@@ -40,70 +42,58 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.operators.bridges import _bfs_forest
+from graphscope_spark.operators.bridges import (_bfs_forest, _non_tree_edges,
+                                               _sweep_up)
 from graphscope_spark.operators.wcc import hashmin
-from graphscope_spark.runtime.superstep import (Truncator, free_truncated,
-                                                truncate)
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                free_truncated, truncate)
 
 
-def _tree_with_pre(graph: LinkGraph, t: Truncator):
-    """BFS forest + subtree size + per-tree preorder.
-    Returns (tree_df(vid, depth, parent, sz, pre), max_depth)."""
-    tree, max_depth = _bfs_forest(graph)
+def _tree_with_pre(graph: LinkGraph):
+    """(tree, max_depth): BFS forest + subtree size + per-tree preorder;
+    tree (vid, depth, parent, sz, before, pre, chg) is the caller's to free."""
+    forest, max_depth = _bfs_forest(graph)
     # subtree sizes: leaf-to-root
-    state = t(tree.select("vid", "depth", "parent", F.lit(1).alias("sz")), "sz")
-    free_truncated(tree)
-    for d in range(max_depth, 0, -1):
-        up = (
-            state.filter(F.col("depth") == d)
-            .groupBy(F.col("parent").alias("vid"))
-            .agg(F.sum("sz").alias("csz"))
-        )
-        state = t(
-            state.join(up, "vid", "left")
-            .select("vid", "depth", "parent",
-                    (F.col("sz") + F.coalesce("csz", F.lit(0))).alias("sz")),
-            "sz")
-    # preorder: root-to-leaf; children ordered by vid within each parent
+    sized = _sweep_up(
+        "bcc_subtree_size",
+        forest.select("vid", "depth", "parent", F.lit(1).alias("sz")),
+        max_depth, [F.sum("sz").alias("csz")],
+        {"sz": F.col("sz") + F.coalesce("csz", F.lit(0))})
+    free_truncated(forest)
+    # preorder: root-to-leaf; children ordered by vid within each parent.
+    # ``pre`` is null until step ``depth`` assigns it (``chg``)
     w = Window.partitionBy("parent").orderBy("vid")
-    kids = state.filter(F.col("parent").isNotNull()).select(
-        "vid", "depth", "parent", "sz",
-        (F.sum("sz").over(w) - F.col("sz")).alias("before"))
-    kids = t(kids, "kids")
-    pre = t(state.filter(F.col("parent").isNull())
-            .select("vid", F.lit(0).alias("pre")), "pre")
-    acc = pre
-    for d in range(1, max_depth + 1):
-        lvl = (
-            kids.filter(F.col("depth") == d)
-            .join(pre.withColumnRenamed("vid", "parent")
-                  .withColumnRenamed("pre", "ppre"), "parent")
-            .select("vid",
-                    (F.col("ppre") + 1 + F.col("before")).alias("pre"))
-        )
-        pre = t(lvl, "pre_lvl")
-        acc = t(acc.unionByName(pre), "pre")
-    out = t(state.join(acc, "vid"), "tree_full")
-    for slot in ("sz", "kids", "pre_lvl"):
-        t.free(slot)
-    return out, max_depth
+    cols = ["vid", "depth", "parent", "sz"]
+    kids = sized.filter(F.col("parent").isNotNull()).select(
+        *cols, (F.sum("sz").over(w) - F.col("sz")).alias("before"),
+        F.lit(None).cast("long").alias("pre"))
+    roots = sized.filter(F.col("parent").isNull()).select(
+        *cols, F.lit(0).cast("long").alias("before"),
+        F.lit(0).cast("long").alias("pre"))
+
+    def step(state: DataFrame, s: int) -> DataFrame:
+        par = state.filter(F.col("depth") == s - 1).select(
+            F.col("vid").alias("parent"), F.col("pre").alias("ppre"))
+        return state.join(par, "parent", "left").select(
+            *cols, "before",
+            F.coalesce("pre", F.col("ppre") + 1 + F.col("before")).alias("pre"),
+            F.col("ppre").isNotNull().alias("chg"))
+
+    tree, _ = SuperstepRunner(graph.spark).run(
+        FixpointJob("bcc_preorder", kids.unionByName(roots), step),
+        max_steps=max_depth)
+    free_truncated(sized)
+    return tree, max_depth
 
 
 def _bcc_labels(graph: LinkGraph):
-    """Internal: (tree_full, non_tree, comp_of_tree_edge(vid, comp),
-    max_depth, truncator)."""
-    t = Truncator()
-    tree, max_depth = _tree_with_pre(graph, t)
-    tree_edges = tree.filter(F.col("parent").isNotNull())
-    canon = graph.und_edges().filter(F.col("src") < F.col("dst")) \
-        .select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
-    te_canon = tree_edges.select(
-        F.least("parent", "vid").alias("lo"),
-        F.greatest("parent", "vid").alias("hi"))
-    non_tree = t(canon.join(te_canon, ["lo", "hi"], "left_anti"), "non_tree")
+    """Internal: (tree, non-tree edges nt, comp_of_tree_edge lab(vid,
+    comp)); the caller frees all three."""
+    tree, max_depth = _tree_with_pre(graph)
+    non_tree = truncate(_non_tree_edges(graph, tree))
 
     pr = tree.select("vid", "pre", "sz", "depth", "parent")
-    nt = (
+    nt = truncate(
         non_tree
         .join(pr.select(F.col("vid").alias("lo"), F.col("pre").alias("pre_lo"),
                         F.col("sz").alias("sz_lo"), F.col("depth").alias("d_lo")),
@@ -112,7 +102,7 @@ def _bcc_labels(graph: LinkGraph):
                         F.col("sz").alias("sz_hi"), F.col("depth").alias("d_hi")),
               "hi")
     )
-    nt = t(nt, "nt")
+    free_truncated(non_tree)
 
     # ---- low/high: base from incident non-tree partners, then sweep ----
     partner = (
@@ -122,24 +112,15 @@ def _bcc_labels(graph: LinkGraph):
         .groupBy("vid").agg(F.min("ppre").alias("blo"),
                             F.max("ppre").alias("bhi"))
     )
-    lh = t(
+    lh = _sweep_up(
+        "bcc_low_high",
         tree.join(partner, "vid", "left")
         .select("vid", "depth", "parent", "pre", "sz",
                 F.least("pre", F.coalesce("blo", "pre")).alias("low"),
                 F.greatest("pre", F.coalesce("bhi", "pre")).alias("high")),
-        "lh")
-    for d in range(max_depth, 0, -1):
-        up = (
-            lh.filter(F.col("depth") == d)
-            .groupBy(F.col("parent").alias("vid"))
-            .agg(F.min("low").alias("clow"), F.max("high").alias("chigh"))
-        )
-        lh = t(
-            lh.join(up, "vid", "left")
-            .select("vid", "depth", "parent", "pre", "sz",
-                    F.least("low", F.coalesce("clow", "low")).alias("low"),
-                    F.greatest("high", F.coalesce("chigh", "high")).alias("high")),
-            "lh")
+        max_depth, [F.min("low").alias("clow"), F.max("high").alias("chigh")],
+        {"low": F.least("low", F.coalesce("clow", "low")),
+         "high": F.greatest("high", F.coalesce("chigh", "high"))})
 
     # ---- aux graph on tree edges (edge (p(v), v) ≡ v) ------------------
     # R1: unrelated non-tree endpoints (disjoint intervals, same tree)
@@ -161,15 +142,16 @@ def _bcc_labels(graph: LinkGraph):
                    | (F.col("high") >= F.col("wpre") + F.col("wsz"))))
         .select(F.col("vid").alias("src"), F.col("parent").alias("dst"))
     )
-    aux = t(r1.unionByName(r2).distinct(), "aux")
+    aux = truncate(r1.unionByName(r2).distinct())
+    free_truncated(lh)
     aux_sym = aux.unionByName(
         aux.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
     # ---- components of the aux graph: WCC's HashMin -------------------
-    # ``lab`` is not in ``t``: callers free it after materializing outputs
     lab = hashmin(aux_sym, tree.filter(F.col("parent").isNotNull())
                   .select("vid", F.col("vid").alias("comp")))
-    return tree, nt, lab, max_depth, t
+    free_truncated(aux)
+    return tree, nt, lab
 
 
 def _bcc_edge_labels(tree, nt, lab) -> DataFrame:
@@ -191,8 +173,8 @@ def _bcc_edge_labels(tree, nt, lab) -> DataFrame:
     return tree_out.unionByName(nt_out).withColumnRenamed("comp", "bcc")
 
 
-def _articulation_vids(tree, lab) -> DataFrame:
-    """(vid) cut vertices from a _bcc_labels result."""
+def _articulation_vids(tree, nt, lab) -> DataFrame:
+    """(vid) cut vertices from a _bcc_labels result (``nt`` unused)."""
     child_edges = tree.filter(F.col("parent").isNotNull()).select(
         "vid", "parent").join(lab, "vid")
     roots = (
@@ -213,37 +195,35 @@ def _articulation_vids(tree, lab) -> DataFrame:
     return roots.unionByName(nonroots).distinct()
 
 
+def _bcc_outputs(graph: LinkGraph, *outputs) -> list[DataFrame]:
+    """``truncate(f(tree, nt, lab))`` for each f in ``outputs`` from ONE
+    _bcc_labels run, whose frames are freed once those are materialized."""
+    tree, nt, lab = _bcc_labels(graph)
+    try:
+        return [truncate(f(tree, nt, lab)) for f in outputs]
+    finally:
+        for df in (tree, nt, lab):
+            free_truncated(df)
+
+
 def bcc_and_articulation(graph: LinkGraph) -> tuple[DataFrame, DataFrame]:
     """((src, dst, bcc), (vid)) — both outputs from ONE _bcc_labels
     pipeline run (BFS forest + preorder sweeps + aux-graph fixpoint are
     the expensive multi-round part; callers needing both — e.g. the
     contract's bcc + articulation_points over the same graph — pay it
     once)."""
-    tree, nt, lab, _, t = _bcc_labels(graph)
-    edges = truncate(_bcc_edge_labels(tree, nt, lab))
-    artic = truncate(_articulation_vids(tree, lab))
-    t.close()
-    free_truncated(lab)
-    return edges, artic
+    return tuple(_bcc_outputs(graph, _bcc_edge_labels, _articulation_vids))
 
 
 def biconnected_components(graph: LinkGraph) -> DataFrame:
     """(src, dst, bcc) — canonical (src < dst) simple undirected edges
     labeled by biconnected component (label = min tree-edge child vid in
     the component)."""
-    tree, nt, lab, _, t = _bcc_labels(graph)
-    out = truncate(_bcc_edge_labels(tree, nt, lab))
-    t.close()
-    free_truncated(lab)
-    return out
+    return _bcc_outputs(graph, _bcc_edge_labels)[0]
 
 
 def articulation_points(graph: LinkGraph) -> DataFrame:
     """(vid) — cut vertices: roots with ≥2 distinct child-edge
     components; non-roots with a child edge outside their own parent
     edge's component."""
-    tree, nt, lab, _, t = _bcc_labels(graph)
-    out = truncate(_articulation_vids(tree, lab))
-    t.close()
-    free_truncated(lab)
-    return out
+    return _bcc_outputs(graph, _articulation_vids)[0]

@@ -8,7 +8,9 @@ accumulation), summed over sources — the Brandes algorithm. The rebuild
 batches ALL sources through each phase simultaneously: pair-state
 (source, vid, depth, sigma) advances one BFS level per superstep
 (cross-source work shares one shuffle), then dependencies sweep back one
-depth level per superstep.
+depth level per superstep. Both phases are ``FixpointJob``s: the forward
+one grows a frontier until nothing is reached, the backward one sweeps
+max_depth steps.
 
 ``sources=None`` samples ``num_pivots`` hash-chosen pivots (the standard
 Brandes-subset approximation — the only mode that survives at scale);
@@ -28,7 +30,8 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.traversal import resolve_sources
-from graphscope_spark.runtime.superstep import Truncator
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                free_truncated)
 
 
 def betweenness_centrality(graph: LinkGraph,
@@ -38,74 +41,75 @@ def betweenness_centrality(graph: LinkGraph,
     """(vid, betweenness). Sampled-pivot estimate by default; exact with
     ``sources="all"``."""
     sources = resolve_sources(graph, sources, num_pivots, seed)
-    delta, edges, _t = _brandes_delta(graph, sources)
+    delta, edges = _brandes_delta(graph, sources)
     return _finish_vertex(graph, delta, edges, sources, normalized)
 
 
 def _brandes_delta(graph: LinkGraph, sources: list[int]):
     """Batched Brandes forward+backward: the per-(source, vid) state
-    table (source, vid, depth, sigma, delta) all betweenness flavors
-    post-process, plus the persisted traversal edges."""
+    table (source, vid, depth, sigma, delta, chg) all betweenness
+    flavors post-process, plus the persisted traversal edges."""
     spark = graph.spark
-    t = Truncator()
     # undirected LinkGraphs store both orientations (factory-enforced;
     # sym_edges() returns them as-is) — the conditional only matters for
     # directed graphs, where we traverse out-edges only
     edges = (graph.edges if graph.directed else graph.sym_edges()) \
         .select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    cols = ["source", "vid", "depth", "sigma"]
 
-    src_df = spark.createDataFrame([(int(s),) for s in sources], "source LONG")
     # ---- forward: levels with path counts --------------------------------
-    # state rows: (source, vid, depth, sigma)
-    settled = t(src_df.select(
-        "source", F.col("source").alias("vid"),
-        F.lit(0).alias("depth"), F.lit(1.0).alias("sigma")), "settled")
-    frontier = settled
-    depth = 0
-    while True:
-        depth += 1
+    # state rows: (source, vid, depth, sigma, chg = reached this step)
+    def forward(state: DataFrame, depth: int) -> DataFrame:
         nxt = (
-            edges.join(frontier.withColumnRenamed("vid", "src"), "src")
+            edges.join(state.filter(F.col("chg"))
+                       .select("source", F.col("vid").alias("src"), "sigma"), "src")
             .groupBy("source", F.col("dst").alias("vid"))
             .agg(F.sum("sigma").alias("sigma"))
-            .join(settled.select("source", "vid"), ["source", "vid"], "left_anti")
-            .select("source", "vid", F.lit(depth).alias("depth"), "sigma")
+            .join(state.select("source", "vid"), ["source", "vid"], "left_anti")
         )
-        nxt = t(nxt, "frontier")
-        if nxt.isEmpty():
-            break
-        settled = t(settled.unionByName(nxt), "settled")
-        frontier = nxt
-    max_depth = depth - 1
+        return state.select(*cols, F.lit(False).alias("chg")).unionByName(
+            nxt.select("source", "vid", F.lit(depth).alias("depth"), "sigma",
+                       F.lit(True).alias("chg")))
+
+    src_df = spark.createDataFrame([(int(s),) for s in sources], "source LONG")
+    fwd = SuperstepRunner(spark)
+    settled, _ = fwd.run(FixpointJob("brandes_forward", src_df.select(
+        "source", F.col("source").alias("vid"), F.lit(0).alias("depth"),
+        F.lit(1.0).alias("sigma"), F.lit(True).alias("chg")), forward))
+    # the last step reached nothing, so the deepest level is one step earlier
+    max_depth = len(fwd.history) - 1
 
     # ---- backward: dependency accumulation, deepest level first ----------
-    # delta(v) = Σ_{w ∈ succ(v)} sigma(v)/sigma(w) · (1 + delta(w))
-    delta = t(settled.select(
-        "source", "vid", "depth", "sigma", F.lit(0.0).alias("delta")), "delta")
-    t.free("settled")
-    t.free("frontier")
-    for d in range(max_depth, 0, -1):
-        lower = delta.filter(F.col("depth") == d).select(
-            "source", F.col("vid").alias("w"),
+    # delta(v) = Σ_{w ∈ succ(v)} sigma(v)/sigma(w) · (1 + delta(w)); step s
+    # writes level d - 1 from level d = max_depth - s + 1
+    def backward(state: DataFrame, s: int) -> DataFrame:
+        d = max_depth - s + 1
+        lower = state.filter(F.col("depth") == d).select(
+            "source", F.col("vid").alias("dst"),
             ((1.0 + F.col("delta")) / F.col("sigma")).alias("contrib_per_sigma"))
         # successors of v at depth d-1 are its out-neighbors at depth d
         contribs = (
-            edges.join(lower.withColumnRenamed("w", "dst"),
-                       "dst")
+            edges.join(lower, "dst")
             .select("source", F.col("src").alias("vid"), "contrib_per_sigma")
             .groupBy("source", "vid").agg(F.sum("contrib_per_sigma").alias("c"))
         )
-        delta = t(
-            delta.join(contribs, ["source", "vid"], "left")
+        return (
+            state.join(contribs, ["source", "vid"], "left")
             .select(
-                "source", "vid", "depth", "sigma",
+                *cols,
                 F.when(F.col("depth") == d - 1,
                        F.col("delta") + F.col("sigma") * F.coalesce("c", F.lit(0.0)))
                 .otherwise(F.col("delta")).alias("delta"),
-            ),
-            "delta",
+                (F.col("depth") == d - 1).alias("chg"),
+            )
         )
-    return delta, edges, t
+
+    delta, _ = SuperstepRunner(spark).run(FixpointJob(
+        "brandes_backward", settled.select(
+            *cols, F.lit(0.0).alias("delta"), F.lit(False).alias("chg")),
+        backward), max_steps=max_depth)
+    free_truncated(settled)
+    return delta, edges
 
 
 def _finish_vertex(graph: LinkGraph, delta, edges, sources,
@@ -152,7 +156,7 @@ def edge_betweenness_centrality(graph: LinkGraph,
     cost is shared with (and identical to) the vertex operator."""
     n = graph.num_vertices
     sources = resolve_sources(graph, sources, num_pivots, seed)
-    delta, edges, _t = _brandes_delta(graph, sources)
+    delta, edges = _brandes_delta(graph, sources)
     lo = delta.select("source", F.col("vid").alias("src"),
                       F.col("depth").alias("_dlo"),
                       F.col("sigma").alias("_sv"))

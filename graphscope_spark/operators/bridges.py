@@ -22,6 +22,10 @@ formulation instead (same output):
      crosses it. Non-tree edges are never bridges (they close a cycle
      with the tree path).
 
+Both loops are ``FixpointJob``s: the BFS forest grows a frontier until
+no vertex is reached; the sweep (``_sweep_up``, shared with bcc) runs
+max_depth steps.
+
 Probabilistic: a non-empty crossing set XOR-ing to exactly 0 has
 probability ~2^-64 per edge (the standard cycle-space hashing argument).
 Defined on the simple undirected view (parallel edges are never
@@ -36,7 +40,7 @@ from pyspark.sql import functions as F
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.wcc import wcc
 from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
-                                                Truncator, free_truncated)
+                                                free_truncated, truncate)
 
 
 def _bfs_forest(graph: LinkGraph) -> tuple[DataFrame, int]:
@@ -75,51 +79,64 @@ def _bfs_forest(graph: LinkGraph) -> tuple[DataFrame, int]:
     return state, len(runner.history) - 1
 
 
+def _non_tree_edges(graph: LinkGraph, tree: DataFrame) -> DataFrame:
+    """(lo, hi) canonical simple edges outside the BFS forest ``tree``."""
+    tree_edges = tree.filter(F.col("parent").isNotNull()).select(
+        F.least("parent", "vid").alias("lo"),
+        F.greatest("parent", "vid").alias("hi"))
+    return (graph.und_edges().filter(F.col("src") < F.col("dst"))
+            .select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
+            .join(tree_edges, ["lo", "hi"], "left_anti"))
+
+
+def _sweep_up(name: str, state: DataFrame, max_depth: int,
+              aggs: list, fold: dict) -> DataFrame:
+    """Leaf-to-root sweep over a BFS-forest frame (vid, depth, parent,
+    ...): step s folds level d = max_depth - s + 1 into its parents.
+    ``aggs`` aggregate a level's rows per parent; ``fold`` maps a column
+    to its new value over the row and those aggregates (null where no
+    child folded in); ``chg`` marks the parents that got a fold. Every
+    BFS level is non-empty, so the job runs exactly max_depth steps."""
+    def step(st: DataFrame, s: int) -> DataFrame:
+        up = (st.filter(F.col("depth") == max_depth - s + 1)
+              .groupBy(F.col("parent").alias("vid"))
+              .agg(*aggs, F.count("*").alias("_kids")))
+        return st.join(up, "vid", "left").select(
+            *[fold.get(c, F.col(c)).alias(c) for c in state.columns],
+            F.col("_kids").isNotNull().alias("chg"))
+
+    out, _ = SuperstepRunner(state.sparkSession).run(
+        FixpointJob(name, state.withColumn("chg", F.lit(False)), step),
+        max_steps=max_depth)
+    return out
+
+
 def bridges(graph: LinkGraph) -> DataFrame:
     """(src, dst) canonical (src < dst) bridge edges of the simple
     undirected view."""
-    t = Truncator()
     tree, max_depth = _bfs_forest(graph)
-    tree_edges = tree.filter(F.col("parent").isNotNull()).select(
-        F.least("parent", "vid").alias("lo"),
-        F.greatest("parent", "vid").alias("hi"),
-        F.col("vid").alias("child"))
-    canon = graph.und_edges().filter(F.col("src") < F.col("dst")) \
-        .select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
-    non_tree = canon.join(tree_edges.select("lo", "hi"), ["lo", "hi"],
-                          "left_anti") \
-        .withColumn("h", F.xxhash64("lo", "hi"))
+    non_tree = _non_tree_edges(graph, tree).withColumn(
+        "h", F.xxhash64("lo", "hi"))
     # endpoint tags: XOR of incident non-tree edge hashes
     tags = (
         non_tree.select(F.col("lo").alias("vid"), "h")
         .unionByName(non_tree.select(F.col("hi").alias("vid"), "h"))
         .groupBy("vid").agg(F.bit_xor("h").alias("tag"))
     )
-    state = t(
+    # leaf-to-root: fold each level's subtree XOR into its parent
+    state = _sweep_up(
+        "bridges_xor",
         tree.join(tags, "vid", "left")
         .select("vid", "depth", "parent",
-                F.coalesce("tag", F.lit(0)).alias("sub")), "sweep")
-    # leaf-to-root: fold each level's subtree XOR into its parent
-    for d in range(max_depth, 0, -1):
-        up = (
-            state.filter(F.col("depth") == d)
-            .groupBy(F.col("parent").alias("vid"))
-            .agg(F.bit_xor("sub").alias("cx"))
-        )
-        state = t(
-            state.join(up, "vid", "left")
-            .select("vid", "depth", "parent",
-                    F.when(F.col("cx").isNotNull(),
-                           F.col("sub").bitwiseXOR(F.col("cx")))
-                    .otherwise(F.col("sub")).alias("sub")),
-            "sweep",
-        )
-    out = (
+                F.coalesce("tag", F.lit(0)).alias("sub")),
+        max_depth, [F.bit_xor("sub").alias("cx")],
+        {"sub": F.when(F.col("cx").isNotNull(),
+                       F.col("sub").bitwiseXOR(F.col("cx")))
+         .otherwise(F.col("sub"))})
+    free_truncated(tree)
+    out = truncate(
         state.filter(F.col("parent").isNotNull() & (F.col("sub") == 0))
         .select(F.least("parent", "vid").alias("src"),
-                F.greatest("parent", "vid").alias("dst"))
-    )
-    out = t(out, "out")
-    t.free("sweep")
-    free_truncated(tree)
+                F.greatest("parent", "vid").alias("dst")))
+    free_truncated(state)
     return out

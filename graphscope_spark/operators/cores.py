@@ -12,8 +12,9 @@ Reference semantics:
   with threshold k gets core number k-1... (phase semantics below: a
   vertex surviving the k-peel but not the (k+1)-peel has core k).
 
-Spark shape: the peel loop is degree-recompute + filter — each round one
-aggregation over the remaining edge set; the frontier-style optimization
+Spark shape: the peel is a ``FixpointJob`` — each step one degree
+aggregation and two joins over the remaining edge set; the
+frontier-style optimization
 (only neighbors of removed vertices change degree) is kept implicitly by
 AQE since the removed set shrinks fast.
 """
@@ -22,46 +23,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
-                                                Truncator, free_truncated)
+                                                free_truncated)
 
 
 def _peel(edges: DataFrame, k: int) -> DataFrame:
-    """Remove vertices with degree < k until stable; returns the surviving
-    symmetric edge set. ``edges`` must be the symmetric simple view.
-
-    One driver action per round: the degree table is persisted and a
-    single aggregate yields both the total and surviving vertex counts
-    (the old two-``count()`` form doubled the job count of the whole
-    ascending-peel ``core_numbers`` loop).
-
-    The incoming ``edges`` (usually the graph-lifetime cached
-    ``und_edges`` view) is used as-is — persisting/unpersisting it here
-    would evict the shared cache for every later operator on the graph;
-    pruned rounds are checkpointed by the Truncator, which also reclaims
-    each superseded round's blocks."""
-    t = Truncator()
-    while True:
-        deg = edges.groupBy("src").agg(F.count("*").alias("deg")).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        row = deg.agg(
-            F.count("*").alias("tot"),
-            F.sum((F.col("deg") >= k).cast("long")).alias("kept")).first()
-        if (row["tot"] or 0) == (row["kept"] or 0):
-            deg.unpersist()
-            return edges
-        keep = deg.filter(F.col("deg") >= k).select("src")
-        pruned = (
-            edges.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .select("src", "dst")
+    """Remove vertices with degree < k from the symmetric simple view
+    ``edges`` until stable; returns the runner's final state (src, dst,
+    chg), every row kept. Each step recounts degrees over the rows the
+    previous step kept and flags ``chg`` on an edge with an endpoint
+    below k. The init state is a new plan over ``edges`` (usually the
+    graph-cached ``und_edges``), so the runner never unpersists it."""
+    def step(state: DataFrame, step_no: int) -> DataFrame:
+        live = state.filter(~F.col("chg")).select("src", "dst")
+        deg = live.groupBy("src").agg(F.count("*").alias("deg"))
+        return (
+            live.join(deg.select("src", F.col("deg").alias("sdeg")), "src")
+            .join(deg.select(F.col("src").alias("dst"),
+                             F.col("deg").alias("ddeg")), "dst")
+            .select("src", "dst",
+                    ((F.col("sdeg") < k) | (F.col("ddeg") < k)).alias("chg"))
         )
-        pruned = t(pruned, "peel_edges")
-        deg.unpersist()
-        edges = pruned
+
+    state, _ = SuperstepRunner(edges.sparkSession).run(FixpointJob(
+        "kcore_peel", edges.select("src", "dst", F.lit(False).alias("chg")),
+        step))
+    return state
 
 
 def kcore(graph: LinkGraph, k: int) -> DataFrame:
@@ -70,8 +59,8 @@ def kcore(graph: LinkGraph, k: int) -> DataFrame:
     assigns them core 0."""
     if k <= 0:
         return graph.vertices.select("vid")
-    surv = _peel(graph.und_edges(), k)
-    return surv.select(F.col("src").alias("vid")).distinct()
+    return _peel(graph.und_edges(), k).select(
+        F.col("src").alias("vid")).distinct()
 
 
 def kshell(graph: LinkGraph, k: int) -> DataFrame:

@@ -13,10 +13,9 @@ and drops edges with support < k-2 until a fixpoint.
 
 Scale shape: the orientation bounds the wedge-join fan-out to
 O(sqrt(E)) per vertex exactly as in triangle counting; each round is two
-joins + one aggregation over a strictly shrinking edge set; the
-driver-side loop truncates lineage per round (stats-reset ``truncate`` —
-the house rule for driver loops, see runtime/superstep.py) so plan cost
-stays flat however many peel rounds the graph needs.
+joins + one aggregation over a strictly shrinking edge set; the peel is
+a ``FixpointJob`` (runtime/superstep.py), which truncates lineage every
+step, so plan cost stays flat however many peel rounds the graph needs.
 
 Support counts are orientation-independent, so a SQL oracle can replay a
 bounded number of rounds with the simpler canonical (src<dst)
@@ -28,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import Truncator, truncate
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                free_truncated, truncate)
 
 
 def _canonical_edges(graph: LinkGraph) -> DataFrame:
@@ -79,6 +79,23 @@ def _edge_support(edges: DataFrame) -> DataFrame:
         F.coalesce("support", F.lit(0)).cast("long").alias("support"))
 
 
+def _truss_peel(edges: DataFrame, k: int,
+                 max_steps: int = 1_000_000) -> DataFrame:
+    """Runner state (src, dst, support, chg) of the k-truss peel of the
+    canonical ``edges``: each step recounts support over the rows the
+    previous step kept and flags ``chg`` (dropped) below k-2, until a
+    step drops nothing; the ``~chg`` rows are the last round's kept."""
+    def step(state: DataFrame, step_no: int) -> DataFrame:
+        return _edge_support(state.filter(~F.col("chg")).select("src", "dst")) \
+            .withColumn("chg", F.col("support") < k - 2)
+
+    init = edges.select("src", "dst", F.lit(None).cast("long").alias("support"),
+                        F.lit(False).alias("chg"))
+    state, _ = SuperstepRunner(edges.sparkSession).run(
+        FixpointJob("ktruss", init, step), max_steps=max_steps)
+    return state
+
+
 def ktruss(graph: LinkGraph, k: int, max_rounds: int | None = None) -> DataFrame:
     """Edges of the k-truss → (src, dst, support), src < dst; ``support``
     is the edge's triangle count at the last evaluated round.
@@ -87,25 +104,11 @@ def ktruss(graph: LinkGraph, k: int, max_rounds: int | None = None) -> DataFrame
     for incremental passes); ``None`` runs to the fixpoint."""
     if k < 3:
         raise ValueError(f"k-truss requires k >= 3 (got {k})")
-    t = Truncator()
-    edges = t(_canonical_edges(graph), "edges")
-    rounds = 0
-    try:
-        while True:
-            supported = t(_edge_support(edges), "sup")
-            n_before = supported.count()
-            survivors = supported.filter(F.col("support") >= k - 2)
-            n_after = survivors.count()
-            rounds += 1
-            if n_after == n_before or n_after == 0 or (
-                    max_rounds is not None and rounds >= max_rounds):
-                # final state still referenced by the caller: truncate a
-                # copy OUT of the Truncator (independent block set) so
-                # t.close() can free every loop checkpoint
-                return truncate(survivors)
-            edges = t(survivors.select("src", "dst"), "edges")
-    finally:
-        t.close()
+    state = _truss_peel(_canonical_edges(graph), k,
+                        1_000_000 if max_rounds is None else max(1, max_rounds))
+    out = truncate(state.filter(~F.col("chg")).select("src", "dst", "support"))
+    free_truncated(state)
+    return out
 
 
 def truss_number_max(graph: LinkGraph, k_start: int = 3) -> int:
@@ -122,34 +125,28 @@ def truss_number_max(graph: LinkGraph, k_start: int = 3) -> int:
     k_start-1. The (k+1)-truss is a subgraph of the k-truss, so each
     ascent level peels the previous level's survivors, not the full
     graph."""
-    t = Truncator()
-    try:
-        base = t(_canonical_edges(graph), "edges")
-        if base.count() == 0:
-            return 0
+    base = _canonical_edges(graph)
+    if base.isEmpty():
+        return 0
 
-        def peel(edges: DataFrame, k: int) -> DataFrame | None:
-            """k-truss of ``edges`` (threshold k-2, to fixpoint), or
-            None when it is empty."""
-            while True:
-                supported = t(_edge_support(edges), "sup")
-                survivors = supported.filter(F.col("support") >= k - 2)
-                n_before, n_after = supported.count(), survivors.count()
-                if n_after == 0:
-                    return None
-                edges = t(survivors.select("src", "dst"), "edges")
-                if n_after == n_before:
-                    return edges
+    def peel(edges: DataFrame, k: int) -> DataFrame | None:
+        """Converged k-truss peel state of ``edges``, or None if empty."""
+        state = _truss_peel(edges, k)
+        if state.isEmpty():
+            free_truncated(state)
+            return None
+        return state
 
-        k, edges = 2, base
-        if k_start > 3:
-            jump = peel(base, k_start - 1)
-            if jump is not None:
-                k, edges = k_start - 1, jump
-        while True:
+    k, edges = 2, base
+    if k_start > 3:
+        jump = peel(base, k_start - 1)
+        if jump is not None:
+            k, edges = k_start - 1, jump
+    while True:
+        try:
             nxt = peel(edges, k + 1)
-            if nxt is None:
-                return k
-            k, edges = k + 1, nxt
-    finally:
-        t.close()
+        finally:
+            free_truncated(edges)
+        if nxt is None:
+            return k
+        k, edges = k + 1, nxt

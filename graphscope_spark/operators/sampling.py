@@ -155,7 +155,7 @@ def neighbor_sample(graph: LinkGraph, seeds, fanouts=(10, 5),
         frontier = spark.createDataFrame(
             [(int(s),) for s in seeds], "src LONG").distinct()
     t = Truncator()
-    frontier = t(frontier, "frontier").persist(StorageLevel.MEMORY_AND_DISK)
+    frontier = t(frontier, "frontier")
     out = None
     nv = max(1, graph.num_vertices)
     for hop, fanout in enumerate(fanouts):
@@ -177,5 +177,7 @@ def neighbor_sample(graph: LinkGraph, seeds, fanouts=(10, 5),
         out = t(out, "out")
         frontier = t(sampled.select(F.col("dst").alias("src")).distinct(),
                      "frontier")
+    t.free("sampled")
+    t.free("frontier")
     return out if out is not None else spark.createDataFrame(
         [], "hop INT, src LONG, dst LONG")

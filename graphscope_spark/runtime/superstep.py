@@ -100,7 +100,10 @@ class FixpointJob(SuperstepJob):
     with a boolean ``chg`` column (kept, so a step can use it as its
     frontier) marking a row still live: changed this round, or not yet
     decided. The job converges once no row is live; the count (scalar
-    ``changed``) is observed on the runner's one materialization."""
+    ``changed``) is observed on the runner's one materialization. A loop's
+    second slot is a filter on ``chg``: a growing frontier (rows reached
+    this round), a shrinking set (rows dropped this round; the next step
+    reads ``~chg``) or a fixed-depth sweep (rows written; ``max_steps``)."""
 
     def __init__(self, name: str, init_state: DataFrame,
                  step: Callable[[DataFrame, int], DataFrame]):
@@ -293,6 +296,8 @@ class SuperstepRunner:
                     f"resume config mismatch: checkpoint {manifest['config']} "
                     f"!= job {job.config()}"
                 )
+            # else a same-session writer's cached copy stands in for the files
+            self.spark.catalog.refreshByPath(manifest["state_path"])
             state = self.spark.read.parquet(manifest["state_path"]).persist(
                 StorageLevel.MEMORY_AND_DISK)
             parts = manifest["per_partition"]
@@ -360,4 +365,8 @@ class SuperstepRunner:
             state.unpersist()
             raise
 
+        if not self.history:  # return a truncate result, as every run does
+            out = truncate(state)
+            state.unpersist()
+            state = out
         return state, scalars

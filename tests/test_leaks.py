@@ -55,7 +55,10 @@ def _mk(spark, n=60, m=240, seed=8):
                                   "core_numbers", "voterank", "mis",
                                   "ktruss", "bcc", "color",
                                   "fluid_community", "bridges", "k_center",
-                                  "onion_layers", "maximal_matching"])
+                                  "onion_layers", "maximal_matching",
+                                  "kcore", "truss_number_max",
+                                  "articulation_points", "edge_betweenness",
+                                  "neighbor_sample"])
 def test_loop_algorithms_release_checkpoints(spark, algo):
     import graphscope_spark as gs
 
@@ -90,6 +93,16 @@ def test_loop_algorithms_release_checkpoints(spark, algo):
         gs.onion_layers(g).count()
     elif algo == "maximal_matching":
         gs.maximal_matching(g).count()
+    elif algo == "kcore":
+        gs.kcore(g, 4).count()
+    elif algo == "truss_number_max":
+        gs.truss_number_max(g)
+    elif algo == "articulation_points":
+        gs.articulation_points(g).count()
+    elif algo == "edge_betweenness":
+        gs.edge_betweenness_centrality(g, sources="all").count()
+    elif algo == "neighbor_sample":
+        gs.neighbor_sample(g, [0, 1, 2], fanouts=(3, 2)).count()
     after = _persistent_count(spark)
     # a loop of k iterations used to leak ~k block sets; now at most a
     # handful of live result/graph-cache entries may remain
@@ -156,4 +169,45 @@ def test_triangles_reuse_cached_orientation(spark):
         gs.triangles(g).count()
     after = _persistent_count(spark)
     assert after <= before, f"triangles leaked {after - before} RDD(s)"
+    g.unpersist_all()
+
+
+def test_zero_step_run_result_is_freeable(spark):
+    """A run of zero supersteps (an empty sweep, or a resume from a
+    converged checkpoint) returns a ``truncate`` result like any other
+    run: ``free_truncated`` on it leaves no persistent RDD behind."""
+    from pyspark.sql import functions as F
+
+    from graphscope_spark.runtime.superstep import (FixpointJob,
+                                                    SuperstepRunner,
+                                                    free_truncated)
+
+    init = spark.range(10).select(F.col("id").alias("vid"),
+                                  F.lit(True).alias("chg"))
+    before = _persistent_count(spark)
+    state, _ = SuperstepRunner(spark).run(
+        FixpointJob("noop", init, lambda st, s: st), max_steps=0)
+    assert state.count() == 10
+    free_truncated(state)
+    after = _persistent_count(spark)
+    assert after <= before, f"zero-step run leaked {after - before} RDD(s)"
+
+
+def test_betweenness_from_a_source_without_out_edges(spark):
+    """A source with no out-edges reaches nothing (BFS depth 0): both
+    betweenness flavors are all zeros and the loops leave no blocks."""
+    import graphscope_spark as gs
+
+    g = LinkGraph(spark, spark.createDataFrame([(0, 1), (1, 2)],
+                                               "src LONG, dst LONG"))
+    before = _persistent_count(spark)
+    vb = {r["vid"]: r["betweenness"] for r in gs.betweenness_centrality(
+        g, sources=[2], normalized=False).collect()}
+    eb = {(r["src"], r["dst"]): r["betweenness"]
+          for r in gs.edge_betweenness_centrality(
+              g, sources=[2], normalized=False).collect()}
+    assert vb == {0: 0.0, 1: 0.0, 2: 0.0}
+    assert eb == {(0, 1): 0.0, (1, 2): 0.0}
+    leaked = _persistent_count(spark) - before
+    assert leaked <= 6, f"betweenness leaked {leaked} persistent RDDs"
     g.unpersist_all()

@@ -104,8 +104,10 @@ def test_core_numbers_kcore_kshell(g, small_graph):
     got = {r["vid"]: r["core"] for r in core_numbers(g).collect()}
     assert got == want
     kmax = max(want.values())
-    in_kcore = {r["vid"] for r in kcore(g, kmax).collect()}
-    assert in_kcore == {v for v, c in want.items() if c >= kmax}
+    # the (kmax+1)-core is empty: its peel drops every edge
+    for k in range(1, kmax + 2):
+        in_kcore = {r["vid"] for r in kcore(g, k).collect()}
+        assert in_kcore == {v for v, c in want.items() if c >= k}, k
     shell = {r["vid"] for r in kshell(g, kmax - 1).collect()}
     assert shell == {v for v, c in want.items() if c == kmax - 1}
 

@@ -93,4 +93,4 @@ def test_hand_written_truncator_loops_only_shrink():
     ``FixpointJob`` or ``SuperstepJob``) instead of adding one."""
     pkg = ROOT / "graphscope_spark"
     n = sum(p.read_text().count("Truncator()") for p in pkg.rglob("*.py"))
-    assert n <= 19, f"{n} Truncator() loops; move new loops onto the runner"
+    assert n <= 13, f"{n} Truncator() loops; move new loops onto the runner"

@@ -164,10 +164,13 @@ def test_resume_config_mismatch_refuses(spark, tmp_path):
     g.unpersist_all()
 
 
-def test_checkpoint_partition_checksums_detect_corruption(spark, tmp_path):
+@pytest.mark.parametrize("keep_state", [False, True])
+def test_checkpoint_partition_checksums_detect_corruption(spark, tmp_path,
+                                                          keep_state):
     """The per-partition checksums in the manifest are real: their row
     counts add up to the checkpointed parquet, and a resume from a state
-    file with one value changed (same row count) is refused."""
+    file with one value changed (same row count) is refused, also in the
+    session that wrote it while its returned state is still cached."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -179,7 +182,8 @@ def test_checkpoint_partition_checksums_detect_corruption(spark, tmp_path):
     ckpt = str(tmp_path / "wcc_ckpt")
     r = SuperstepRunner(spark, checkpoint_dir=ckpt, checkpoint_every=1)
     state, _ = r.run(WCCJob(g), max_steps=2)
-    state.unpersist()  # as after a crash: no cached copy of the parquet
+    if not keep_state:
+        state.unpersist()  # as after a crash: no cached copy of the parquet
     man = r.latest_checkpoint()
     spath = man["state_path"]
     total_rows = sum(p["rows"] for p in man["per_partition"])
@@ -200,3 +204,4 @@ def test_checkpoint_partition_checksums_detect_corruption(spark, tmp_path):
         r2.run(WCCJob(g), resume=True)
     assert r2.history == []
     g.unpersist_all()
+    state.unpersist()
