@@ -197,8 +197,13 @@ def resolve_edges(files: DataFrame) -> DataFrame:
     resolved reference; unresolved imports (external libs) drop out of the
     inner join, as in any real import-graph build.
     """
+    # explode_outer + a null filter, not explode: for an inner explode the
+    # optimizer infers ``size(imports) > 0`` on its input, which evaluates
+    # the Arrow UDF a second time for every file
     refs = (
-        files.select("oid", "repo", "sha256", F.explode("imports").alias("tok"))
+        files.select("oid", "repo", "sha256",
+                     F.explode_outer("imports").alias("tok"))
+        .filter(F.col("tok").isNotNull())
         .withColumn("tok", F.regexp_replace("tok", r"\.h$", ""))
         .withColumn("tok", F.regexp_replace("tok", "/", "."))
         # java in-repo imports are fully qualified with own repo: strip it

@@ -12,6 +12,18 @@ the (big) edge side. The oid→vid dense VertexMap
 (performance_tuning.md:22-40) becomes a deterministic two-level dense-id
 assignment (per-partition offsets + intra-partition row_number) — no global
 single-partition window, so it scales to 10^12 vertices.
+
+The base tables are materialized fragments with leaf plans, like the
+reference's ``ArrowFragment``, which keeps nothing of how it was loaded:
+the constructor cuts its input's lineage once (``truncate``) and caches
+the repartitioned copy of that checkpoint. A cache over the loader's own
+plan (a corpus pipeline: Python UDFs, resolve joins, the vertex map) made
+every view, operator and superstep plan built on the graph carry that
+plan too, and AQE renders the whole string on every plan update (its
+``SparkListenerSQLAdaptiveExecutionUpdate`` explain runs even with the UI
+off): a ``triangles`` query on a 20k-file import graph held a 26 MB plan
+string (200 MB once AQE had re-planned it), seconds of driver time per
+query stage.
 """
 
 from __future__ import annotations
@@ -19,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from graphscope_spark.runtime.superstep import free_truncated, truncate
 
 
 def assign_dense_ids(
@@ -74,9 +88,17 @@ class LinkGraph:
     ``vertices``: (vid: long [, oid, properties...]); derived from edges if
     not given.
 
-    The constructor repartitions the edge table by ``src`` once and persists
-    it; all algorithms join against this stable partitioning (reference
-    analogue: the immutable ArrowFragment shared by every app run).
+    The constructor materializes its inputs once (``truncate``), then
+    repartitions the edge table by ``src`` (vertices by ``vid``) and
+    persists it; all algorithms join against this stable partitioning
+    (reference analogue: the immutable ArrowFragment shared by every app
+    run). Truncating the input, not the repartitioned frame, keeps the
+    cache's ``hashpartitioning`` (a checkpoint of it reports
+    ``UnknownPartitioning`` under AQE, so every superstep would re-exchange
+    the edges) and gives every cache a leaf plan: building a graph eagerly
+    runs its loader once, and the plans built on it stay kilobytes.
+    ``unpersist_all`` frees the checkpoints, so no frame derived from the
+    graph may be computed after it.
     """
 
     def __init__(
@@ -98,18 +120,24 @@ class LinkGraph:
         self.num_partitions = num_partitions
         prop_cols = [c for c in edges.columns if c not in ("src", "dst")]
         self.edge_prop_cols = prop_cols
-        self.edges = (
-            edges.select(F.col("src").cast("long"), F.col("dst").cast("long"),
-                         *[F.col(c) for c in prop_cols])
-            .repartition(self.num_partitions, "src")
+        # frames under the graph's caches, freed by unpersist_all: the
+        # checkpoints of the inputs, then any loader-side intermediates
+        # (oid→vid map, dense-id stage) that factories register
+        base = truncate(edges.select(
+            F.col("src").cast("long"), F.col("dst").cast("long"),
+            *[F.col(c) for c in prop_cols]))
+        self._aux_cached: list[DataFrame] = [base]
+        self.edges = base.repartition(self.num_partitions, "src") \
             .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if vertices is None:
+        if vertices is None:  # read the edge cache: already a leaf plan
             vertices = (
                 self.edges.select(F.col("src").alias("vid"))
                 .union(self.edges.select(F.col("dst").alias("vid")))
                 .distinct()
             )
+        else:
+            vertices = truncate(vertices)
+            self._aux_cached.append(vertices)
         self.vertices = (
             vertices.repartition(self.num_partitions, "vid").persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -121,9 +149,6 @@ class LinkGraph:
         self._oriented_edges: DataFrame | None = None
         self._out_degrees: DataFrame | None = None
         self._und_degrees: DataFrame | None = None
-        # loader-side persisted intermediates (oid→vid map, dense-id
-        # stage) registered by factories so unpersist_all can free them
-        self._aux_cached: list[DataFrame] = []
 
     # ---- factories -------------------------------------------------------
 
@@ -149,6 +174,9 @@ class LinkGraph:
         # silently re-exchanged every superstep whenever the two differ
         num_partitions = num_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions"))
+        # materialized once: the vertex map and both endpoint joins read it,
+        # and each would otherwise rerun the loader's pipeline
+        oid_edges = truncate(oid_edges.select(src_col, dst_col))
         # per-side distinct BEFORE the union: the map-side combine of each
         # distinct dedupes the (wide, string) oid column early, so the
         # union that feeds the final distinct carries far fewer rows —
@@ -179,7 +207,10 @@ class LinkGraph:
             ).distinct()
         g = cls(spark, e, vertices=vmap, directed=directed,
                 num_partitions=num_partitions)
-        g._aux_cached.extend(aux)
+        # dead: the constructor's checkpoints were their last readers
+        free_truncated(oid_edges)
+        for df in aux:
+            df.unpersist()
         return g
 
     # ---- basic stats (REPORT_GRAPH, reference grape_instance.cc:353-359) --
@@ -382,3 +413,4 @@ class LinkGraph:
                    self._out_degrees, self._und_degrees, *self._aux_cached):
             if df is not None:
                 df.unpersist()
+                free_truncated(df)

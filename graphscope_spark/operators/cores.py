@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
@@ -53,21 +54,36 @@ def _peel(edges: DataFrame, k: int) -> DataFrame:
     return state
 
 
+def _cached(df: DataFrame) -> DataFrame:
+    """``df`` persisted and materialized, so the caller releases it with
+    a plain ``unpersist()`` and the inputs it was built from can go."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df.count()
+    return df
+
+
 def kcore(graph: LinkGraph, k: int) -> DataFrame:
     """Vertices of the k-core → (vid). The 0-core is every vertex
     (isolated vertices included), matching ``core_numbers`` which
-    assigns them core 0."""
+    assigns them core 0. The result is a materialized cache (the peel's
+    state is freed), released with ``unpersist()``."""
     if k <= 0:
-        return graph.vertices.select("vid")
-    return _peel(graph.und_edges(), k).select(
-        F.col("src").alias("vid")).distinct()
+        return _cached(graph.vertices.select("vid"))
+    state = _peel(graph.und_edges(), k)
+    out = _cached(state.select(F.col("src").alias("vid")).distinct())
+    free_truncated(state)
+    return out
 
 
 def kshell(graph: LinkGraph, k: int) -> DataFrame:
-    """Vertices with core number exactly k → (vid)."""
+    """Vertices with core number exactly k → (vid); a materialized cache,
+    released with ``unpersist()``."""
     core_k = kcore(graph, k)
     core_k1 = kcore(graph, k + 1)
-    return core_k.join(core_k1, "vid", "left_anti")
+    out = _cached(core_k.join(core_k1, "vid", "left_anti"))
+    core_k.unpersist()
+    core_k1.unpersist()
+    return out
 
 
 def onion_layers(graph: LinkGraph) -> DataFrame:

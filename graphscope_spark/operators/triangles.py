@@ -52,12 +52,10 @@ def triangle_count(graph: LinkGraph) -> int:
 def triangles(graph: LinkGraph) -> DataFrame:
     """Per-vertex triangle counts (vid, tricnt); vertices in no triangle
     get 0, matching the reference's zero-initialized tricnt array."""
-    tris = triangle_list(graph)
-    corners = (
-        tris.select(F.col("a").alias("vid"))
-        .union(tris.select(F.col("b").alias("vid")))
-        .union(tris.select(F.col("c").alias("vid")))
-    )
+    # one pass over the triangle list: a union of its three columns would
+    # plan (and run) the three-join enumeration once per corner
+    corners = triangle_list(graph).select(
+        F.explode(F.array("a", "b", "c")).alias("vid"))
     cnt = corners.groupBy("vid").agg(F.count("*").alias("tricnt"))
     return graph.vertices.select("vid").join(cnt, "vid", "left").select(
         "vid", F.coalesce("tricnt", F.lit(0)).cast("long").alias("tricnt")
@@ -139,8 +137,7 @@ def triangles_incremental(graph: LinkGraph, new_edges: DataFrame,
                   F.col("_new").alias("n3"))
     tris = (e1.join(e2, "b").join(e3, ["a", "c"])
             .filter(F.col("n1") | F.col("n2") | F.col("n3")))
-    corners = (tris.select(F.col("a").alias("vid"))
-               .union(tris.select("b")).union(tris.select("c")))
+    corners = tris.select(F.explode(F.array("a", "b", "c")).alias("vid"))
     delta = corners.groupBy("vid").agg(F.count("*").alias("_d"))
     verts = und.select(F.col("src").alias("vid")).distinct() \
         .unionByName(graph.vertices.select("vid")).distinct()

@@ -11,9 +11,9 @@ action).
 
 What Spark adds that the reference never needed (SURVEY.md §7.3 risk #1):
 an iterative DataFrame loop grows its logical plan without bound, so the
-runner persists each state, unpersists the previous one, and every
-``checkpoint_every`` steps writes the state to Parquet and re-reads it —
-truncating lineage — together with a JSON manifest capturing loop-carried
+runner truncates each state (the init's included), frees the previous one,
+and every ``checkpoint_every`` steps writes the state to Parquet and
+re-reads it, together with a JSON manifest capturing loop-carried
 scalars and per-partition metrics (rows + xxhash64 checksum + timing). The
 manifest makes a killed job resumable mid-iteration (north-rule
 requirement; replaces vineyard persistence, reference
@@ -313,8 +313,10 @@ class SuperstepRunner:
             start_step = manifest["step"]
             last_ckpt = manifest["step"]
         else:
+            # materialized like every later state: a first step reading a
+            # lazy cache several times runs it under AQE as many more jobs
             state, scalars = job.init(self.spark)
-            state = state.persist(StorageLevel.MEMORY_AND_DISK)
+            state = truncate(state)
 
         converged = scalars.get("converged", False)
         step_no = start_step
@@ -333,7 +335,7 @@ class SuperstepRunner:
                 new_state = truncate(raw_state)
                 scalars, converged = finalize(new_state)
                 # the previous state is a checkpoint (blocks) or the persisted
-                # init/reloaded frame (Dataset cache)
+                # reloaded frame (Dataset cache)
                 free_truncated(state)
                 state.unpersist()
                 state = new_state
@@ -365,7 +367,9 @@ class SuperstepRunner:
             state.unpersist()
             raise
 
-        if not self.history:  # return a truncate result, as every run does
+        if not self.history and manifest is not None:
+            # a resume from a converged checkpoint: return a truncate
+            # result, as every run does
             out = truncate(state)
             state.unpersist()
             state = out

@@ -15,6 +15,7 @@ from graphscope_spark.corpus import (
 from graphscope_spark.operators.pagerank import pagerank
 
 from tests.oracles import pagerank_oracle
+from tests.test_plan_quality import _formatted
 
 N_FILES = 200
 FILES_PER_REPO = 25
@@ -112,3 +113,28 @@ def test_import_graph_pagerank(spark):
     assert len(ranks) == len(want)
     for v, r in ranks.items():
         assert abs(r - want[v]) < 1e-6, (v, oid_of[v], r, want[v])
+
+
+def test_build_path_runs_the_extract_udf_once(spark):
+    """An inner explode of the UDF's array lets the optimizer infer
+    ``size(imports) > 0`` on its input, a second ArrowEvalPython of the
+    same UDF over every file."""
+    c = synthesize_corpus(spark, n_files=N_FILES, files_per_repo=FILES_PER_REPO)
+    plan = _formatted(resolve_edges(ingest(c)))
+    assert plan.split("\n(1)")[0].count("ArrowEvalPython") == 1, plan
+
+
+def test_import_graph_plans_cut_the_corpus_lineage(spark):
+    """The graph's base tables are leaf plans: no cache or operator plan
+    built on them carries the corpus pipeline, whose full text AQE would
+    render again on every plan update."""
+    from graphscope_spark.operators.triangles import triangles
+
+    c = synthesize_corpus(spark, n_files=N_FILES, files_per_repo=FILES_PER_REPO)
+    g = build_import_graph(spark, c, num_partitions=4)
+    for name, df in (("edges", g.edges), ("vertices", g.vertices),
+                     ("triangles", triangles(g))):
+        plan = _formatted(df)
+        for node in ("MapInPandas", "ArrowEvalPython"):
+            assert node not in plan, f"{name} plan carries {node}:\n{plan}"
+    g.unpersist_all()

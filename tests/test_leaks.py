@@ -172,6 +172,23 @@ def test_triangles_reuse_cached_orientation(spark):
     g.unpersist_all()
 
 
+@pytest.mark.parametrize("op", ["kcore", "kshell"])
+def test_core_results_release_with_unpersist(spark, op):
+    """kcore/kshell return a cache the caller frees with a plain
+    ``unpersist()``: the peel's own checkpoint blocks are gone with it."""
+    import graphscope_spark as gs
+
+    g = _mk(spark)
+    g.und_edges().count()  # the graph-lifetime view the peel reads
+    before = _persistent_count(spark)
+    out = getattr(gs, op)(g, 3)
+    assert out.count() > 0
+    out.unpersist()
+    after = _persistent_count(spark)
+    assert after <= before, f"{op} left {after - before} persistent RDD(s)"
+    g.unpersist_all()
+
+
 def test_zero_step_run_result_is_freeable(spark):
     """A run of zero supersteps (an empty sweep, or a resume from a
     converged checkpoint) returns a ``truncate`` result like any other

@@ -62,15 +62,21 @@ def test_wcc_scalars_carry_message_volume(spark, tiny_graph):
 def test_from_oid_edges_uses_shuffle_partition_count(spark):
     e = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], "src_oid STRING, dst_oid STRING")
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
     g = LinkGraph.from_oid_edges(spark, e)
     assert g.num_partitions == int(
         spark.conf.get("spark.sql.shuffle.partitions"))
     assert g.edges.rdd.getNumPartitions() == g.num_partitions
+    g.und_degrees().count()
     # loader aux caches are tracked and freed
     assert g._aux_cached
     g.unpersist_all()
     for df in g._aux_cached:
         assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
+    # ...and so are the checkpoints under the base tables; one-sided
+    # because the ContextCleaner may drop unrelated GC'd RDDs meanwhile
+    after = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert after <= before, f"graph build left {after - before} RDD(s)"
 
 
 def test_msbfs_duplicate_sources_and_closeness_runner(spark, tiny_graph):
