@@ -28,6 +28,8 @@ query stage.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -120,9 +122,8 @@ class LinkGraph:
         self.num_partitions = num_partitions
         prop_cols = [c for c in edges.columns if c not in ("src", "dst")]
         self.edge_prop_cols = prop_cols
-        # frames under the graph's caches, freed by unpersist_all: the
-        # checkpoints of the inputs, then any loader-side intermediates
-        # (oid→vid map, dense-id stage) that factories register
+        # the checkpoints of the inputs under the caches, freed by
+        # unpersist_all
         base = truncate(edges.select(
             F.col("src").cast("long"), F.col("dst").cast("long"),
             *[F.col(c) for c in prop_cols]))
@@ -161,13 +162,18 @@ class LinkGraph:
         dst_col: str = "dst_oid",
         directed: bool = True,
         num_partitions: int | None = None,
+        oid_vertices: DataFrame | None = None,
+        edge_props: Sequence[str] = (),
     ) -> "LinkGraph":
         """Build from edges keyed by arbitrary (string) original ids.
 
         Mirrors CREATE_GRAPH (reference:
         analytical_engine/core/loader/arrow_fragment_loader.h:248-255):
         build the oid→vid map, then broadcast-free join it onto both edge
-        endpoints.
+        endpoints. ``oid_vertices`` (``oid`` [, properties...]) adds
+        vertices no edge touches, and its property columns are joined onto
+        the vertex table; ``edge_props`` names the ``oid_edges`` columns
+        kept as edge properties.
         """
         # MUST default to the shuffle partition count, like the
         # constructor: a defaultParallelism-partitioned edge cache gets
@@ -176,7 +182,8 @@ class LinkGraph:
             spark.conf.get("spark.sql.shuffle.partitions"))
         # materialized once: the vertex map and both endpoint joins read it,
         # and each would otherwise rerun the loader's pipeline
-        oid_edges = truncate(oid_edges.select(src_col, dst_col))
+        edge_props = list(edge_props)
+        oid_edges = truncate(oid_edges.select(src_col, dst_col, *edge_props))
         # per-side distinct BEFORE the union: the map-side combine of each
         # distinct dedupes the (wide, string) oid column early, so the
         # union that feeds the final distinct carries far fewer rows —
@@ -184,6 +191,8 @@ class LinkGraph:
         oids = oid_edges.select(F.col(src_col).alias("oid")).distinct().union(
             oid_edges.select(F.col(dst_col).alias("oid")).distinct()
         )
+        if oid_vertices is not None:
+            oids = oids.union(oid_vertices.select("oid").distinct())
         aux: list[DataFrame] = []
         vmap = assign_dense_ids(oids, "oid", num_partitions, aux=aux) \
             .persist(StorageLevel.MEMORY_AND_DISK)
@@ -195,7 +204,7 @@ class LinkGraph:
                 vmap.withColumnRenamed("vid", "dst").withColumnRenamed("oid", "_doid"),
                 F.col(dst_col) == F.col("_doid"),
             )
-            .select("src", "dst")
+            .select("src", "dst", *edge_props)
         )
         if not directed:
             # the LinkGraph contract requires undirected edge sets to be
@@ -203,9 +212,13 @@ class LinkGraph:
             # undirected CSR does); inputs list each edge once, so mirror
             # it here — distinct() keeps already-symmetric inputs stable
             e = e.union(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
+                         *edge_props)
             ).distinct()
-        g = cls(spark, e, vertices=vmap, directed=directed,
+        vertices = vmap
+        if oid_vertices is not None and len(oid_vertices.columns) > 1:
+            vertices = vmap.join(oid_vertices, "oid", "left")
+        g = cls(spark, e, vertices=vertices, directed=directed,
                 num_partitions=num_partitions)
         # dead: the constructor's checkpoints were their last readers
         free_truncated(oid_edges)

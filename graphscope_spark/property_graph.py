@@ -36,7 +36,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphscope_spark.graph import LinkGraph, assign_dense_ids
+from graphscope_spark.graph import LinkGraph
 
 
 def _field(df: DataFrame, field) -> str:
@@ -191,36 +191,14 @@ class PropertyGraph:
         """Flatten every label into one LinkGraph (vertex oids namespaced
         ``label:id``); isolated vertices from the vertex tables are kept,
         exactly like the reference fragment's full vertex map."""
-        spark = self.spark
-        nparts = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
         e = self._namespaced_edges()
         v_oids = None
         for lb, df in sorted(self._vertices.items()):
             v = df.select(F.concat(F.lit(lb + ":"), F.col("id")).alias("oid"))
             v_oids = v if v_oids is None else v_oids.unionByName(v)
-        oids = e.select(F.col("src_oid").alias("oid")).distinct().union(
-            e.select(F.col("dst_oid").alias("oid")).distinct())
-        if v_oids is not None:
-            oids = oids.union(v_oids.distinct())
-        aux: list = []
-        vmap = assign_dense_ids(oids, "oid", nparts, aux=aux)
-        edges = (
-            e.join(vmap.withColumnRenamed("vid", "src"),
-                   e["src_oid"] == vmap["oid"]).drop("oid")
-            .join(vmap.withColumnRenamed("vid", "dst")
-                  .withColumnRenamed("oid", "_doid"),
-                  F.col("dst_oid") == F.col("_doid"))
-            .select("src", "dst")
-        )
-        if not self.directed:
-            edges = edges.union(edges.select(F.col("dst").alias("src"),
-                                             F.col("src").alias("dst"))) \
-                .distinct()
-        g = LinkGraph(spark, edges, vertices=vmap,
-                      directed=self.directed, num_partitions=nparts)
-        g._aux_cached.extend(aux)
-        return g
+        return LinkGraph.from_oid_edges(
+            self.spark, e, directed=self.directed, num_partitions=num_partitions,
+            oid_vertices=v_oids)
 
     def project_to_simple(self, v_prop: str | None = None,
                           e_prop: str | None = None,
@@ -237,9 +215,6 @@ class PropertyGraph:
                 "project_to_simple needs exactly 1 vertex and 1 edge label "
                 f"(have {self.vertex_labels} / {self.edge_labels}); "
                 "call project(...) first")
-        spark = self.spark
-        nparts = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
         (_, rels), = self._edges.items()
         e = rels[0][2]
         for _, _, df in rels[1:]:
@@ -248,30 +223,8 @@ class PropertyGraph:
         e = e.select(F.col("src").alias("src_oid"),
                      F.col("dst").alias("dst_oid"), *wcols)
         (_, vdf), = self._vertices.items()
-        oids = e.select(F.col("src_oid").alias("oid")).distinct().union(
-            e.select(F.col("dst_oid").alias("oid")).distinct()).union(
-            vdf.select(F.col("id").alias("oid")).distinct())
-        aux: list = []
-        vmap = assign_dense_ids(oids, "oid", nparts, aux=aux)
-        edges = (
-            e.join(vmap.withColumnRenamed("vid", "src"),
-                   e["src_oid"] == vmap["oid"]).drop("oid")
-            .join(vmap.withColumnRenamed("vid", "dst")
-                  .withColumnRenamed("oid", "_doid"),
-                  F.col("dst_oid") == F.col("_doid"))
-            .select("src", "dst", *(["w"] if e_prop else []))
-        )
-        if not self.directed:
-            edges = edges.union(edges.select(F.col("dst").alias("src"),
-                                             F.col("src").alias("dst"),
-                                             *(["w"] if e_prop else []))) \
-                .distinct()
-        verts = vmap
-        if v_prop:
-            verts = vmap.join(
-                vdf.select(F.col("id").alias("oid"),
-                           F.col(v_prop).alias("prop")), "oid", "left")
-        g = LinkGraph(spark, edges, vertices=verts,
-                      directed=self.directed, num_partitions=nparts)
-        g._aux_cached.extend(aux)
-        return g
+        vprops = [F.col(v_prop).alias("prop")] if v_prop else []
+        return LinkGraph.from_oid_edges(
+            self.spark, e, directed=self.directed, num_partitions=num_partitions,
+            oid_vertices=vdf.select(F.col("id").alias("oid"), *vprops),
+            edge_props=["w"] if e_prop else [])

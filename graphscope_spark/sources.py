@@ -69,35 +69,10 @@ def load_csv_graph(
         e = df.select(pick(df, src_col).cast("string").alias("src_oid"),
                       pick(df, dst_col).cast("string").alias("dst_oid"))
         edges = e if edges is None else edges.unionByName(e)
-    if not vfile:
-        return LinkGraph.from_oid_edges(spark, edges, directed=directed,
-                                        num_partitions=num_partitions)
-    # vfile branch: build the ONE dense-id map directly over vertex-file
-    # oids ∪ edge endpoints (isolated vertices still appear) — building a
-    # throwaway graph first would compute and cache a second vmap
-    vframes = [_read_csv(spark, u) for u in vfile.split(";") if u]
     verts = None
-    for df in vframes:
+    for df in (_read_csv(spark, u) for u in (vfile or "").split(";") if u):
         v = df.select(pick(df, oid_col).cast("string").alias("oid"))
         verts = v if verts is None else verts.unionByName(v)
-    from graphscope_spark.graph import assign_dense_ids
-    all_oids = verts.unionByName(
-        edges.select(F.col("src_oid").alias("oid"))).unionByName(
-        edges.select(F.col("dst_oid").alias("oid")))
-    nparts = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
-    vmap = assign_dense_ids(all_oids, "oid", nparts)
-    e = (
-        edges.join(vmap.withColumnRenamed("vid", "src")
-                   .withColumnRenamed("oid", "src_oid"), "src_oid")
-        .join(vmap.withColumnRenamed("vid", "dst")
-              .withColumnRenamed("oid", "dst_oid"), "dst_oid")
-        .select("src", "dst")
-    )
-    if not directed:
-        # LinkGraph's undirected contract: both orientations stored
-        e = e.union(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-    return LinkGraph(spark, e, vertices=vmap.select("vid", "oid"),
-                     directed=directed, num_partitions=num_partitions)
+    return LinkGraph.from_oid_edges(spark, edges, directed=directed,
+                                    num_partitions=num_partitions,
+                                    oid_vertices=verts)

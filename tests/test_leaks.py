@@ -189,6 +189,22 @@ def test_core_results_release_with_unpersist(spark, op):
     g.unpersist_all()
 
 
+def test_vertex_file_build_leaves_no_cache(spark, tmp_path):
+    """A CSV build with a vertex file keeps its isolated vertices, and its
+    dense-id stage is freed like every oid-keyed build's."""
+    from graphscope_spark import load_csv_graph
+
+    ef, vf = tmp_path / "e.csv", tmp_path / "v.csv"
+    ef.write_text("src,dst\na,b\nb,c\n")
+    vf.write_text("id\na\nb\nc\nz\n")
+    before = _persistent_count(spark)
+    g = load_csv_graph(spark, str(ef), vfile=str(vf))
+    assert (g.num_vertices, g.num_edges) == (4, 2)
+    g.unpersist_all()
+    after = _persistent_count(spark)
+    assert after <= before, f"build left {after - before} persistent RDD(s)"
+
+
 def test_zero_step_run_result_is_freeable(spark):
     """A run of zero supersteps (an empty sweep, or a resume from a
     converged checkpoint) returns a ``truncate`` result like any other

@@ -68,13 +68,13 @@ def test_from_oid_edges_uses_shuffle_partition_count(spark):
         spark.conf.get("spark.sql.shuffle.partitions"))
     assert g.edges.rdd.getNumPartitions() == g.num_partitions
     g.und_degrees().count()
-    # loader aux caches are tracked and freed
+    # the checkpoints under the base tables are tracked and freed, and
+    # nothing else of the build stays; one-sided because the
+    # ContextCleaner may drop unrelated GC'd RDDs meanwhile
     assert g._aux_cached
     g.unpersist_all()
     for df in g._aux_cached:
         assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-    # ...and so are the checkpoints under the base tables; one-sided
-    # because the ContextCleaner may drop unrelated GC'd RDDs meanwhile
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after <= before, f"graph build left {after - before} RDD(s)"
 
