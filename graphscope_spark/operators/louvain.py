@@ -29,8 +29,7 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
-                                                Truncator, free_truncated,
-                                                truncate)
+                                                free_truncated, truncate)
 
 
 def _sym_weighted(graph: LinkGraph, weight_col: str | None) -> DataFrame:
@@ -145,7 +144,6 @@ def louvain(graph: LinkGraph, weight_col: str | None = None,
     if not m2:
         return graph.vertices.select("vid", F.col("vid").alias("community"))
     # mapping original vid → current community (composed across levels)
-    t = Truncator()
     mapping = truncate(
         graph.vertices.select("vid", F.col("vid").alias("comm")))
     lvl_edges = edges
@@ -179,18 +177,19 @@ def louvain(graph: LinkGraph, weight_col: str | None = None,
         # carry the internal weight needed by the next level)
         cs = comm.withColumnRenamed("vid", "src").withColumnRenamed("comm", "ns")
         cd = comm.withColumnRenamed("vid", "dst").withColumnRenamed("comm", "nd")
-        lvl_edges = (
+        nxt = truncate(
             lvl_edges.join(cs, "src").join(cd, "dst")
             .groupBy(F.col("ns").alias("src"), F.col("nd").alias("dst"))
             .agg(F.sum("w").alias("w"))
         )
-        lvl_edges = t(lvl_edges, "lvl_edges")
+        free_truncated(lvl_edges)  # a no-op on level 0's persisted edges
+        lvl_edges = nxt
         free_truncated(comm)
     # deterministic labels: min original vid per community
     rep = mapping.groupBy("comm").agg(F.min("vid").alias("community"))
     out = mapping.join(rep, "comm").select("vid", "community")
     edges.unpersist()
-    t.free("lvl_edges")
+    free_truncated(lvl_edges)
     return out
 
 

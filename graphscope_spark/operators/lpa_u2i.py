@@ -15,6 +15,9 @@ starting at 2 after setup (`lpa_u2i.h:120-145`):
     (lpa_u2i.h:224-230), where out_deg(u) = |out(u)| and
     nbr_in_deg_sum(u) = Σ_{i∈out(u)} in_deg(i).
 Runs while step ≤ max_round; the result is the u-side label vector.
+Here one superstep is a u2i stage followed by its i2u stage over the one
+u-label state, so the job runs (max_round - 1) // 2 steps; a trailing
+u2i stage (even max_round) writes only i labels, which nothing reads.
 """
 
 from __future__ import annotations
@@ -23,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from graphscope_spark.runtime.superstep import Truncator, free_truncated, truncate
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                free_truncated, truncate)
 
 
 def lpa_u2i(spark: SparkSession, u: DataFrame, edges: DataFrame,
@@ -36,10 +40,9 @@ def lpa_u2i(spark: SparkSession, u: DataFrame, edges: DataFrame,
     e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("i"),
                      F.col(weight_col).cast("double").alias("w")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    trunc = Truncator()
-    ulab = trunc(u.select(F.col("vid").alias("u"),
-                      *[F.col(c).cast("double").alias(f"p{k}")
-                        for k, c in enumerate(prop_cols)]), "ulab")
+    init = u.select(F.col("vid").alias("u"),
+                    *[F.col(c).cast("double").alias(f"p{k}")
+                      for k, c in enumerate(prop_cols)])
     # degrees (constant): out_deg(u), in_deg(i), nbr_in_deg_sum(u)
     out_deg = e.groupBy("u").agg(F.count("*").alias("od"))
     in_deg = e.groupBy("i").agg(F.count("*").alias("idg"))
@@ -47,39 +50,38 @@ def lpa_u2i(spark: SparkSession, u: DataFrame, edges: DataFrame,
                .agg(F.sum("idg").alias("nsum")))
     consts = truncate(out_deg.join(nbr_sum, "u"))
 
-    ilab = None
-    for step in range(2, max_round + 1):
-        if step % 2 == 0:  # u2i
-            ilab = trunc(
-                e.join(ulab, "u")
-                .groupBy("i")
-                .agg(*[F.sum(F.col(f"p{k}") * F.col("w")).alias(f"p{k}")
-                       for k in range(P)]),
-                "ilab",
+    def step(ulab: DataFrame, _s: int) -> DataFrame:
+        ilab = (  # u2i
+            e.join(ulab, "u")
+            .groupBy("i")
+            .agg(*[F.sum(F.col(f"p{k}") * F.col("w")).alias(f"p{k}")
+                   for k in range(P)])
+        )
+        tmp = (  # i2u
+            e.join(ilab, "i")
+            .groupBy("u")
+            .agg(*[F.sum(F.col(f"p{k}") * F.col("w")).alias(f"t{k}")
+                   for k in range(P)])
+        )
+        upd = ulab.join(tmp, "u", "left").join(consts, "u", "left")
+        new_cols = []
+        for k in range(P):
+            p = F.col(f"p{k}")
+            t = F.coalesce(F.col(f"t{k}"), F.lit(0.0))
+            clamped = (p == 0.0) | (p == 1.0)
+            denom_zero = F.col("nsum").isNull() | (F.col("nsum") == F.col("od"))
+            new_cols.append(
+                F.when(clamped | denom_zero, p)
+                .otherwise((t - F.col("od") * p)
+                           / (F.col("nsum") - F.col("od")))
+                .alias(f"p{k}")
             )
-        else:  # i2u
-            tmp = (
-                e.join(ilab, "i")
-                .groupBy("u")
-                .agg(*[F.sum(F.col(f"p{k}") * F.col("w")).alias(f"t{k}")
-                       for k in range(P)])
-            )
-            upd = ulab.join(tmp, "u", "left").join(consts, "u", "left")
-            new_cols = []
-            for k in range(P):
-                p = F.col(f"p{k}")
-                t = F.coalesce(F.col(f"t{k}"), F.lit(0.0))
-                clamped = (p == 0.0) | (p == 1.0)
-                denom_zero = F.col("nsum").isNull() | (F.col("nsum") == F.col("od"))
-                new_cols.append(
-                    F.when(clamped | denom_zero, p)
-                    .otherwise((t - F.col("od") * p)
-                               / (F.col("nsum") - F.col("od")))
-                    .alias(f"p{k}")
-                )
-            ulab = trunc(upd.select("u", *new_cols), "ulab")
+        # every u row is rewritten: a fixed-depth sweep
+        return upd.select("u", *new_cols, F.lit(True).alias("chg"))
+
+    ulab, _ = SuperstepRunner(spark).run(
+        FixpointJob("lpa_u2i", init, step), max_steps=(max_round - 1) // 2)
     e.unpersist()
-    trunc.free("ilab")
     free_truncated(consts)
     return ulab.select(F.col("u").alias("vid"),
                        *[F.col(f"p{k}").alias(c) for k, c in enumerate(prop_cols)])

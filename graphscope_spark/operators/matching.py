@@ -49,7 +49,8 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.runtime.superstep import (FixpointJob, StepMetrics,
-                                                SuperstepRunner, Truncator)
+                                                SuperstepRunner, free_truncated,
+                                                truncate)
 
 
 def _sym(graph: LinkGraph) -> DataFrame:
@@ -173,42 +174,47 @@ def min_edge_cover(graph: LinkGraph,
 
 
 def min_vertex_cover(graph: LinkGraph) -> DataFrame:
-    """(vid) — greedy threshold-halving vertex cover + validity sweep."""
-    t = Truncator()
-    n = graph.num_vertices
-    edges = t(_sym(graph).select("src", "dst").distinct(), "edges")
-    cover = None
-    nowd = max(2, n // 2)
-    while True:
+    """(vid) — greedy threshold-halving vertex cover + validity sweep.
+
+    Vertex state (vid, in_cover, chg): ``chg`` marks a vertex with an
+    uncovered edge, so the uncovered edges are exactly the edges between
+    two live vertices. Step s picks at threshold nowd = nowd_0 >> (s-1)
+    while that exceeds 1; the next step is the sweep, which covers every
+    remaining edge, so the job ends there."""
+    edges = truncate(_sym(graph).select("src", "dst").distinct())
+    nowd0 = max(2, graph.num_vertices // 2)
+
+    def step(st: DataFrame, s: int) -> DataFrame:
+        live = st.filter(F.col("chg")).select("vid")
+        rest = (edges.join(live.withColumnRenamed("vid", "src"), "src", "left_semi")
+                .join(live.withColumnRenamed("vid", "dst"), "dst", "left_semi"))
+        nowd = nowd0 >> (s - 1)
         if nowd > 1:
-            deg = edges.groupBy(F.col("src").alias("vid")).agg(
-                F.count("*").alias("deg"))
-            picked = t(deg.filter(F.col("deg") >= nowd).select("vid"), "picked")
-            if not picked.isEmpty():
-                cover = picked if cover is None else cover.unionByName(picked)
-                cover = t(cover, "cover")
-                edges = t(
-                    edges.join(picked.withColumnRenamed("vid", "src"), "src",
-                               "left_anti")
-                    .join(picked.withColumnRenamed("vid", "dst"), "dst",
-                          "left_anti"),
-                    "edges")
-            if edges.isEmpty():
-                break
-            nowd //= 2
+            # a vertex of remaining degree >= nowd is picked; one stays
+            # live if it is not and has a neighbor that is not either
+            deg = rest.groupBy(F.col("dst").alias("vid")).agg(
+                F.count("*").alias("ddeg"))
+            per = (rest.join(deg.withColumnRenamed("vid", "dst"), "dst")
+                   .groupBy(F.col("src").alias("vid"))
+                   .agg((F.count("*") >= nowd).alias("_pick"),
+                        F.max(F.col("ddeg") < nowd).alias("_open")))
+            live = ~F.col("_pick") & F.col("_open")
         else:
             # validity sweep: every remaining edge gets its min endpoint
             # (covers all residual edges in one pass)
-            rest = edges.filter(F.col("src") < F.col("dst")) \
-                .select(F.col("src").alias("vid")).distinct()
-            cover = t(rest if cover is None else cover.unionByName(rest), "cover")
-            break
-    out = (cover.distinct() if cover is not None
-           else graph.spark.createDataFrame([], "vid LONG"))
-    out = t(out, "out")
-    for slot in ("edges", "picked", "cover"):
-        t.free(slot)
-    return out
+            per = rest.groupBy(F.col("src").alias("vid")).agg(
+                F.max(F.col("src") < F.col("dst")).alias("_pick"))
+            live = F.lit(False)
+        return st.join(per, "vid", "left").select(
+            "vid", (F.col("in_cover") | F.coalesce("_pick", F.lit(False)))
+            .alias("in_cover"), F.coalesce(live, F.lit(False)).alias("chg"))
+
+    state, _ = SuperstepRunner(graph.spark).run(FixpointJob(
+        "min_vertex_cover", graph.vertices.select(
+            "vid", F.lit(False).alias("in_cover"), F.lit(True).alias("chg")),
+        step))
+    free_truncated(edges)
+    return state.filter(F.col("in_cover")).select("vid")
 
 
 def min_dominating_set(graph: LinkGraph,
@@ -221,60 +227,44 @@ def min_dominating_set(graph: LinkGraph,
     election priority is the RESIDUAL count of still-undominated
     neighbors, recomputed each round — at round 1 nothing is dominated,
     so the residual count equals the full degree the reference's ``init``
-    uses, making per-round recomputation uniformly correct."""
-    t = Truncator()
+    uses, making per-round recomputation uniformly correct.
+
+    Vertex state (vid, in_set, chg): ``chg`` marks a vertex not yet
+    dominated; the job ends once every vertex is."""
     sym = _sym(graph).select("src", "dst").distinct() \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    state = t(
-        graph.vertices.select(
-            "vid", F.lit(False).alias("dominated"), F.lit(False).alias("in_set")),
-        "state")
-    rnd = 0
-    while max_rounds is None or rnd < max_rounds:
-        rnd += 1
-        active = state.filter(~F.col("dominated")).select("vid")
-        if active.isEmpty():
-            break
-        # edges with BOTH endpoints undominated: used for the residual
-        # degree and for the two max-propagation hops
-        act_edges = t(
+
+    def step(st: DataFrame, _s: int) -> DataFrame:
+        active = st.filter(F.col("chg")).select("vid")
+        loops = active.select(F.col("vid").alias("src"), F.col("vid").alias("dst"))
+        # edges with BOTH endpoints undominated, plus a self-loop per
+        # undominated vertex: its closed neighborhood, over which the
+        # residual degree and the two max-propagation hops range
+        closed = (
             sym.join(active.withColumnRenamed("vid", "src"), "src", "left_semi")
-            .join(active.withColumnRenamed("vid", "dst"), "dst", "left_semi"),
-            "act")
-        rdeg = act_edges.groupBy(F.col("src").alias("vid")).agg(
-            F.count("*").alias("deg"))
-        cur = (
-            active.join(rdeg, "vid", "left")
-            .select("vid", F.struct(
-                F.coalesce("deg", F.lit(0)).alias("deg"),
-                F.col("vid").alias("mid")).alias("m"))
-        )
+            .join(active.withColumnRenamed("vid", "dst"), "dst", "left_semi")
+            .unionByName(loops))
+        cur = closed.groupBy("src").agg(F.count("*").alias("n")).select(
+            F.col("src").alias("vid"), F.struct(
+                (F.col("n") - 1).alias("deg"), F.col("src").alias("mid")).alias("m"))
         for _ in range(2):
-            nbr = (
-                act_edges.join(cur.withColumnRenamed("vid", "src"), "src")
-                .groupBy(F.col("dst").alias("vid")).agg(F.max("m").alias("nm"))
-            )
-            cur = (
-                cur.join(nbr, "vid", "left")
-                .select("vid", F.greatest("m", F.coalesce("nm", "m")).alias("m"))
-            )
-        winners = cur.filter(F.col("m.mid") == F.col("vid")).select("vid")
-        winners = t(winners, "winners")
-        dominated = (
-            sym.join(winners.withColumnRenamed("vid", "src"), "src", "left_semi")
-            .select(F.col("dst").alias("vid")).distinct()
-            .unionByName(winners).distinct()
-        )
-        state = t(
-            state
-            .join(winners.withColumn("_w", F.lit(True)), "vid", "left")
-            .join(dominated.withColumn("_d", F.lit(True)), "vid", "left")
-            .select("vid",
-                    (F.col("dominated") | F.col("_d").isNotNull()).alias("dominated"),
-                    (F.col("in_set") | F.col("_w").isNotNull()).alias("in_set")),
-            "state")
+            cur = (closed.join(cur.withColumnRenamed("vid", "src"), "src")
+                   .groupBy(F.col("dst").alias("vid")).agg(F.max("m").alias("m")))
+        winners = cur.filter(F.col("m.mid") == F.col("vid")) \
+            .select(F.col("vid").alias("src"))
+        # a winner dominates its neighbors and itself (_w true)
+        hit = (sym.unionByName(st.select(F.col("vid").alias("src"),
+                                         F.col("vid").alias("dst")))
+               .join(winners, "src")
+               .groupBy(F.col("dst").alias("vid"))
+               .agg(F.max(F.col("src") == F.col("dst")).alias("_w")))
+        return st.join(hit, "vid", "left").select(
+            "vid", (F.col("in_set") | F.coalesce("_w", F.lit(False))).alias("in_set"),
+            (F.col("chg") & F.col("_w").isNull()).alias("chg"))
+
+    state, _ = SuperstepRunner(graph.spark).run(
+        FixpointJob("min_dominating_set", graph.vertices.select(
+            "vid", F.lit(False).alias("in_set"), F.lit(True).alias("chg")),
+            step), max_steps=1_000_000 if max_rounds is None else max_rounds)
     sym.unpersist()
-    out = t(state.filter(F.col("in_set")).select("vid"), "out")
-    for slot in ("winners", "act", "state"):
-        t.free(slot)
-    return out
+    return state.filter(F.col("in_set")).select("vid")

@@ -19,11 +19,14 @@ cycles (the classic tie-breaking argument) and the forest is unique.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import Truncator
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                free_truncated, truncate)
 
 
 def minimum_spanning_forest(graph: LinkGraph,
@@ -32,7 +35,6 @@ def minimum_spanning_forest(graph: LinkGraph,
     per connected component; src < dst canonical). ``weight_col=None``
     means unit weights (any spanning forest is minimal; the
     tie-break-ordered one is returned)."""
-    t = Truncator()
     if weight_col is None:
         e = graph.und_edges().filter(F.col("src") < F.col("dst")) \
             .select("src", "dst", F.lit(1.0).alias("w"))
@@ -44,20 +46,18 @@ def minimum_spanning_forest(graph: LinkGraph,
                     F.col(weight_col).cast("double").alias("w"))
             .groupBy("src", "dst").agg(F.min("w").alias("w"))
         )
-    edges = t(e, "edges")
+    edges = truncate(e)
 
-    comp = t(graph.vertices.select("vid", F.col("vid").alias("comp")), "comp")
-    forest = None
-    guard = 0
+    comp = truncate(graph.vertices.select("vid", F.col("vid").alias("comp")))
+    pieces = []
     while True:
-        guard += 1
-        if guard > 64:
+        if len(pieces) >= 64:
             raise RuntimeError("boruvka did not terminate")
         # relabel endpoints by current component; the cross-component edge
         # count rides the materialization as an observed metric, so the
         # termination test costs no extra job
         obs = Observation()
-        ec = (
+        ec = truncate(
             edges.join(comp.select(F.col("vid").alias("src"),
                                    F.col("comp").alias("cs")), "src")
             .join(comp.select(F.col("vid").alias("dst"),
@@ -65,27 +65,24 @@ def minimum_spanning_forest(graph: LinkGraph,
             .filter(F.col("cs") != F.col("cd"))
             .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        ec = t(ec, "ec")
         if int(obs.get["n"]) == 0:
+            free_truncated(ec)
             break
         # min outgoing edge per component (total order kills weight ties);
         # the picking component c is kept — it seeds the parent pointers
         cand = F.struct("w", "src", "dst", "cs", "cd")
-        picks = (
+        picks = truncate(
             ec.select(F.col("cs").alias("c"), cand.alias("e"))
             .unionByName(ec.select(F.col("cd").alias("c"), cand.alias("e")))
             .groupBy("c").agg(F.min("e").alias("e"))
             .select("c", "e.w", "e.src", "e.dst", "e.cs", "e.cd")
         )
-        picks = t(picks, "picks")
         # mutual picks contribute the same edge twice — dedup for the forest.
         # Each round's piece is truncated ONCE and the pieces union lazily:
         # rewriting the accumulated forest every round would write O(k²)
         # rows over k rounds (and burn one extra job per round)
-        piece = t(picks.select("src", "dst",
-                               F.col("w").alias("weight")).distinct(),
-                  f"piece{guard}")
-        forest = piece if forest is None else forest.unionByName(piece)
+        pieces.append(truncate(picks.select(
+            "src", "dst", F.col("w").alias("weight")).distinct()))
         # contract via pointer doubling: each participating component's
         # parent is the far endpoint of its own pick.  The picked graph is
         # a functional pseudo-forest whose only cycles are 2-cycles
@@ -100,33 +97,28 @@ def minimum_spanning_forest(graph: LinkGraph,
         # every parent is itself a picking component, so one total join
         # finds each row's grandparent; gp == c marks the 2-cycle members
         gp = par.select(F.col("c").alias("_jc"), F.col("p").alias("_jp"))
-        par = t(
+
+        def double(st: DataFrame, _s: int) -> DataFrame:
+            hop = st.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
+            return st.join(hop, F.col("p") == F.col("_pc")).select(
+                "c", F.col("_pp").alias("p"),
+                (F.col("_pp") != F.col("p")).alias("chg"))
+
+        par, _ = SuperstepRunner(graph.spark).run(FixpointJob(
+            "msf_pointer_doubling",
             par.join(gp, F.col("p") == F.col("_jc"))
-            .select("c", F.when(F.col("_jp") == F.col("c"),
-                                F.least("c", "p"))
-                    .otherwise(F.col("p")).alias("p")),
-            "par")
-        while True:
-            dobs = Observation()
-            hop = par.select(F.col("c").alias("_pc"), F.col("p").alias("_pp"))
-            par = t(
-                par.join(hop, F.col("p") == F.col("_pc"))
-                .observe(dobs, F.sum((F.col("_pp") != F.col("p"))
-                                     .cast("long")).alias("chg"))
-                .select("c", F.col("_pp").alias("p")),
-                "par")
-            if int(dobs.get["chg"] or 0) == 0:
-                break
-        comp = t(
-            comp.join(par.withColumnRenamed("c", "comp"), "comp", "left")
-            .select("vid", F.coalesce("p", F.col("comp")).alias("comp")),
-            "comp",
-        )
-    out = t(forest, "out") if forest is not None else \
+            .select("c", F.when(F.col("_jp") == F.col("c"), F.least("c", "p"))
+                    .otherwise(F.col("p")).alias("p")), double))
+        nxt = truncate(
+            comp.join(par.select(F.col("c").alias("comp"), "p"), "comp", "left")
+            .select("vid", F.coalesce("p", F.col("comp")).alias("comp")))
+        for df in (ec, picks, par, comp):
+            free_truncated(df)
+        comp = nxt
+    out = truncate(reduce(DataFrame.unionByName, pieces)) if pieces else \
         graph.spark.createDataFrame([], "src LONG, dst LONG, weight DOUBLE")
-    for slot in ("edges", "comp", "ec", "picks", "par",
-                 *(f"piece{k}" for k in range(1, guard + 1))):
-        t.free(slot)
+    for df in (edges, comp, *pieces):
+        free_truncated(df)
     return out
 
 

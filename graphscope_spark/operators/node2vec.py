@@ -23,8 +23,9 @@ Scale shape (one superstep per step, like PageRank):
   the distance-1 test — key-only columns;
 - per-walk cumulative-sum window (partition = walk_id, partition size
   = out-degree of cur);
-- lineage truncated every step, walks ending at sinks peel off into a
-  done-list instead of silently vanishing from the inner join.
+- the steps are a fixed-depth ``FixpointJob`` on ``SuperstepRunner``
+  (lineage truncated every step); a walk at a sink is carried unchanged
+  (``chg`` false) instead of silently vanishing from the inner join.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.functions.dedup import _hash60
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import Truncator, truncate
+from graphscope_spark.runtime.superstep import FixpointJob, SuperstepRunner
 
 
 def _pick_hash(step: int, seed: int, hash_fn: str):
@@ -74,7 +75,7 @@ def node2vec_walks(graph: LinkGraph, length: int = 4, p: float = 1.0,
            .repartition(graph.num_partitions, "_p")
            .persist(StorageLevel.MEMORY_AND_DISK))
 
-    state = graph.vertices.select(
+    init = graph.vertices.select(
         F.col("vid").alias("walk_id"),
         F.lit(-1).cast("long").alias("prev"),
         F.col("vid").alias("cur"),
@@ -84,57 +85,41 @@ def node2vec_walks(graph: LinkGraph, length: int = 4, p: float = 1.0,
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     tot_w = Window.partitionBy("walk_id")
 
-    # a symmetric (undirected) graph has no sinks once a walk is moving
-    # (arriving via an edge implies the back-edge exists) — so per-step
-    # dead-walk tracking (anti-join + checkpoint) is skipped there. The
-    # one undirected dead case is an ISOLATED vertex in an explicitly
-    # supplied vertex set: peel those length-0 walks once, up front.
-    track_dead = graph.directed
+    def step(state: DataFrame, s: int) -> DataFrame:
+        cand = (state.join(adj.hint("shuffle_hash"),
+                           state["cur"] == adj["src"])
+                .select("walk_id", "prev", "cur", "path", "dst"))
+        cand = cand.join(
+            nbr.hint("shuffle_hash"),
+            (cand["prev"] == nbr["_p"]) & (cand["dst"] == nbr["_x"]),
+            "left")
+        w = (F.when(F.col("prev") < 0, F.lit(w_mid))
+             .when(F.col("dst") == F.col("prev"), F.lit(w_ret))
+             .when(F.col("_x").isNotNull(), F.lit(w_mid))
+             .otherwise(F.lit(w_far)).cast("long"))
+        cand = cand.select(
+            "walk_id", "cur", "path", "dst", w.alias("_w"))
+        cand = cand.select(
+            "*",
+            F.sum("_w").over(cum_w).alias("_cum"),
+            F.sum("_w").over(tot_w).alias("_tot"))
+        r = _pick_hash(s - 1, seed, hash_fn) % F.col("_tot")
+        picked = cand.filter((r >= F.col("_cum") - F.col("_w"))
+                             & (r < F.col("_cum")))
+        stuck = state.join(adj, state["cur"] == adj["src"], "left_anti")
+        return picked.select(
+            "walk_id",
+            F.col("cur").alias("prev"),
+            F.col("dst").alias("cur"),
+            F.concat("path", F.array("dst")).alias("path"),
+            F.lit(True).alias("chg"),
+        ).unionByName(stuck.withColumn("chg", F.lit(False)))
 
-    t = Truncator()
-    done: list[DataFrame] = []
     try:
-        state = t(state, "s0")
-        if not track_dead:
-            iso = state.join(adj, state["cur"] == adj["src"], "left_anti")
-            done.append(t(iso, "done_iso"))
-        for step in range(length):
-            if track_dead:
-                dead = state.join(adj, state["cur"] == adj["src"],
-                                  "left_anti")
-                done.append(t(dead, f"done{step}"))
-            cand = (state.join(adj.hint("shuffle_hash"),
-                               state["cur"] == adj["src"])
-                    .select("walk_id", "prev", "cur", "path", "dst"))
-            cand = cand.join(
-                nbr.hint("shuffle_hash"),
-                (cand["prev"] == nbr["_p"]) & (cand["dst"] == nbr["_x"]),
-                "left")
-            w = (F.when(F.col("prev") < 0, F.lit(w_mid))
-                 .when(F.col("dst") == F.col("prev"), F.lit(w_ret))
-                 .when(F.col("_x").isNotNull(), F.lit(w_mid))
-                 .otherwise(F.lit(w_far)).cast("long"))
-            cand = cand.select(
-                "walk_id", "cur", "path", "dst", w.alias("_w"))
-            cand = cand.select(
-                "*",
-                F.sum("_w").over(cum_w).alias("_cum"),
-                F.sum("_w").over(tot_w).alias("_tot"))
-            r = _pick_hash(step, seed, hash_fn) % F.col("_tot")
-            picked = cand.filter((r >= F.col("_cum") - F.col("_w"))
-                                 & (r < F.col("_cum")))
-            state = t(picked.select(
-                "walk_id",
-                F.col("cur").alias("prev"),
-                F.col("dst").alias("cur"),
-                F.concat("path", F.array("dst")).alias("path")),
-                f"s{step + 1}")
-        out = state.select("walk_id", "path")
-        for d in done:
-            out = out.unionByName(d.select("walk_id", "path"))
-        return truncate(out)
+        state, _ = SuperstepRunner(graph.spark).run(
+            FixpointJob("node2vec_walks", init, step), max_steps=length)
+        return state.select("walk_id", "path")
     finally:
-        t.close()
         adj.unpersist()
         nbr.unpersist()
 

@@ -15,12 +15,13 @@ Reference:
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.operators.traversal import sssp
-from graphscope_spark.runtime.superstep import Truncator
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                free_truncated)
 
 
 def sssp_average_length(graph: LinkGraph, source: int,
@@ -59,46 +60,55 @@ def is_simple_path(graph: LinkGraph, path: list[int]) -> bool:
 
 def voterank(graph: LinkGraph, num_seeds: int = 10) -> list[int]:
     """NX VoteRank: returns the elected seed vertices in election order.
-    Each round is one join+agg over the edge table; ``num_seeds`` rounds.
-    Ties break to the smallest vid (NX's is dict-order; we fix it for
-    determinism)."""
-    spark = graph.spark
+    Each round is one aggregation over the out-neighbor lists;
+    ``num_seeds`` rounds. Ties break to the smallest vid (NX's is
+    dict-order; we fix it for determinism).
+
+    Vertex state (vid, nbrs, ability, elected, chg) carries each
+    vertex's out-neighbor list, so a round joins no edge table: the
+    votes are the exploded lists, the election is in-plan, ``elected``
+    holds the winner's round and ``chg`` marks it. The job ends at the
+    first round with no winner (no unelected vertex with a positive
+    score); one collect of the winners follows the run."""
     sym = graph.sym_edges() if graph.directed else graph.edges.select("src", "dst")
-    n = graph.num_vertices
     avg_k = (graph.und_degrees().agg(F.avg("deg")).first()[0] or 1.0)
     discount = 1.0 / avg_k
-    t = Truncator()
-    ability = graph.vertices.select(
-        "vid", F.lit(1.0).alias("ability")).persist(StorageLevel.MEMORY_AND_DISK)
-    elected: list[int] = []
-    for _ in range(min(num_seeds, n)):
+    adj = sym.groupBy(F.col("src").alias("vid")).agg(F.collect_list("dst").alias("nbrs"))
+    init = graph.vertices.select("vid").join(adj, "vid", "left").select(
+        "vid", F.coalesce("nbrs", F.array().cast("array<long>")).alias("nbrs"),
+        F.lit(1.0).alias("ability"), F.lit(None).cast("int").alias("elected"))
+
+    def step(st: DataFrame, rnd: int) -> DataFrame:
+        # score, elected-ness and the list per vertex in one aggregation
+        # over the votes and the vertex's own row (ability 0)
         score = (
-            sym.join(ability.withColumnRenamed("vid", "src"), "src")
-            .groupBy("dst").agg(F.sum("ability").alias("score"))
+            st.select(F.explode("nbrs").alias("vid"), "ability")
+            .unionByName(st.select("vid", "nbrs", F.lit(0.0).alias("ability"),
+                                   F.col("elected").isNotNull().alias("_e")),
+                         allowMissingColumns=True)
+            .groupBy("vid").agg(F.sum("ability").alias("score"),
+                                F.max("_e").alias("_e"), F.max("nbrs").alias("nbrs"))
         )
-        if elected:
-            score = score.filter(~F.col("dst").isin(elected))
-        top = score.orderBy(F.col("score").desc(), F.col("dst").asc()).first()
-        if top is None or top["score"] <= 0:
-            break
-        winner = int(top["dst"])
-        elected.append(winner)
-        # zero the winner's ability; discount its out-neighbors
-        nbrs = sym.filter(F.col("src") == winner).select(
-            F.col("dst").alias("vid")).distinct()
-        new_ability = (
-            ability.join(nbrs.withColumn("_d", F.lit(discount)), "vid", "left")
-            .select(
-                "vid",
-                F.when(F.col("vid") == winner, F.lit(0.0))
-                .otherwise(F.greatest(
-                    F.col("ability") - F.coalesce("_d", F.lit(0.0)), F.lit(0.0)))
-                .alias("ability"),
-            )
-        )
-        new_ability = t(new_ability, "ability")
-        ability.unpersist()
-        ability = new_ability
-    ability.unpersist()
-    t.close()
-    return elected
+        win = score.filter(F.col("_e") == F.lit(False)) \
+            .filter(F.col("score") > 0).agg(F.max(F.struct(
+                "score", (-F.col("vid")).alias("nv"), "nbrs")).alias("m"))
+        # the winner (position 0, _w true) and its distinct out-neighbors
+        hit = win.select(F.posexplode(F.array_union(
+            F.array(-F.col("m.nv")), F.col("m.nbrs")))) \
+            .select(F.col("col").alias("vid"), (F.col("pos") == 0).alias("_w"))
+        won = F.coalesce("_w", F.lit(False))
+        return st.join(hit, "vid", "left").select(
+            "vid", "nbrs",
+            # zero the winner's ability; discount its out-neighbors
+            F.when(won, F.lit(0.0)).otherwise(F.greatest(
+                F.col("ability") - F.when(F.col("_w").isNotNull(), F.lit(discount))
+                .otherwise(F.lit(0.0)), F.lit(0.0))).alias("ability"),
+            F.when(won, F.lit(rnd)).otherwise(F.col("elected")).alias("elected"),
+            won.alias("chg"))
+
+    state, _ = SuperstepRunner(graph.spark).run(
+        FixpointJob("voterank", init, step),
+        max_steps=min(num_seeds, graph.num_vertices))
+    won = state.filter(F.col("elected").isNotNull()).select("vid", "elected").collect()
+    free_truncated(state)
+    return [r["vid"] for r in sorted(won, key=lambda r: r["elected"])]

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph, assign_dense_ids
-from graphscope_spark.runtime.superstep import Truncator, free_truncated, truncate
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                free_truncated, truncate)
 
 
 def sampling_path(graph: LinkGraph, num_paths: int = 100, length: int = 3,
@@ -52,19 +53,24 @@ def sampling_path(graph: LinkGraph, num_paths: int = 100, length: int = 3,
               F.pmod(F.xxhash64(F.col("walk_id") + seed), F.lit(n)) == F.col("rn"))
         .select("walk_id", F.array("vid").alias("path"), F.col("vid").alias("cur"))
     )
-    t = Truncator()
-    state = t(starts, "state")
-    for step in range(length):
-        choice = F.pmod(F.xxhash64(F.col("walk_id") + seed, F.lit(step + 7)),
+
+    def step(state: DataFrame, s: int) -> DataFrame:
+        # each walk matches at most one adjacency row (its chosen
+        # neighbor); a walk at a sink is carried unchanged (chg False)
+        choice = F.pmod(F.xxhash64(F.col("walk_id") + seed, F.lit(s + 6)),
                         F.col("deg"))
-        nxt = (
-            state.join(adj, state["cur"] == adj["src"])
-            .filter(F.col("nbr_idx") == choice)
-            .select("walk_id", F.concat("path", F.array("dst")).alias("path"),
-                    F.col("dst").alias("cur"))
+        return (
+            state.join(adj, (state["cur"] == adj["src"])
+                       & (adj["nbr_idx"] == choice), "left")
+            .select("walk_id",
+                    F.when(F.col("dst").isNull(), F.col("path"))
+                    .otherwise(F.concat("path", F.array("dst"))).alias("path"),
+                    F.coalesce("dst", "cur").alias("cur"),
+                    F.col("dst").isNotNull().alias("chg"))
         )
-        ended = state.join(nxt.select("walk_id"), "walk_id", "left_anti")
-        state = t(nxt.unionByName(ended), "state")
+
+    state, _ = SuperstepRunner(spark).run(
+        FixpointJob("sampling_path", starts, step), max_steps=length)
     free_truncated(adj)
     adj.unpersist()
     return state.select("walk_id", "path")
@@ -73,36 +79,30 @@ def sampling_path(graph: LinkGraph, num_paths: int = 100, length: int = 3,
 def all_simple_paths(graph: LinkGraph, source: int, target: int,
                      cutoff: int = 5) -> DataFrame:
     """(path: array<long>) — every simple path source→target with ≤
-    `cutoff` edges."""
+    `cutoff` edges. A growing-frontier ``FixpointJob``: the state holds
+    every partial path found so far, and a step extends the paths the
+    previous step added, except those that reached the target."""
     spark = graph.spark
     edges = graph.edges.select("src", "dst").distinct() \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    frontier = truncate(spark.createDataFrame(
-        [([int(source)], int(source))], "path ARRAY<BIGINT>, cur LONG"))
-    # ``found`` lazily unions slices of EVERY depth's expanded checkpoint,
-    # so intermediates stay live until the final copy, then all freed
-    intermediates = [frontier]
-    found = None
-    for _ in range(cutoff):
-        expanded = (
-            frontier.join(edges, frontier["cur"] == edges["src"])
+
+    def step(state: DataFrame, _depth: int) -> DataFrame:
+        grown = (
+            state.filter(F.col("chg") & (F.col("cur") != target))
+            .join(edges, F.col("cur") == F.col("src"))
             .filter(~F.array_contains("path", F.col("dst")))
             .select(F.concat("path", F.array("dst")).alias("path"),
-                    F.col("dst").alias("cur"))
-        )
-        expanded = truncate(expanded)
-        intermediates.append(expanded)
-        hits = expanded.filter(F.col("cur") == target).select("path")
-        found = hits if found is None else found.unionByName(hits)
-        frontier = expanded.filter(F.col("cur") != target)
-        if frontier.isEmpty():
-            break
-    out = truncate(found) if found is not None else spark.createDataFrame(
-        [], "path ARRAY<BIGINT>")
-    for df in intermediates:
-        free_truncated(df)
+                    F.col("dst").alias("cur"), F.lit(True).alias("chg")))
+        return state.withColumn("chg", F.lit(False)).unionByName(grown)
+
+    state, _ = SuperstepRunner(spark).run(FixpointJob(
+        "all_simple_paths", spark.createDataFrame(
+            [([int(source)], int(source), True)],
+            "path ARRAY<BIGINT>, cur LONG, chg BOOLEAN"), step),
+        max_steps=cutoff)
     edges.unpersist()
-    return out
+    return state.filter((F.col("cur") == target) & (F.size("path") > 1)) \
+        .select("path")
 
 
 _PORTABLE_P = 2147483647  # 2^31 - 1: keeps every product below 2^52 (no ANSI overflow)
@@ -141,43 +141,40 @@ def neighbor_sample(graph: LinkGraph, seeds, fanouts=(10, 5),
 
     ``seeds``: list of vids, or a one-column DataFrame. The frontier of
     each hop is the distinct sampled-neighbor set (revisits across hops
-    allowed, as in standard samplers). Frontier joins switch
-    broadcast/shuffle_hash on frontier size like the traversal family.
+    allowed, as in standard samplers). The hops are a growing-frontier
+    ``FixpointJob``: the state holds every sampled (hop, src, dst) row
+    plus the seeds as hop -1 rows, and a hop expands the rows the
+    previous hop added.
     """
     if hash_fn not in ("fast", "portable"):
         raise ValueError("hash_fn must be 'fast' or 'portable'")
     spark = graph.spark
     edges = graph.edges.select("src", "dst").distinct()
     if isinstance(seeds, DataFrame):
-        frontier = seeds.select(F.col(seeds.columns[0]).cast("long")
-                                .alias("src")).distinct()
+        seeds = seeds.select(F.col(seeds.columns[0]).cast("long").alias("dst"))
     else:
-        frontier = spark.createDataFrame(
-            [(int(s),) for s in seeds], "src LONG").distinct()
-    t = Truncator()
-    frontier = t(frontier, "frontier")
-    out = None
-    nv = max(1, graph.num_vertices)
-    for hop, fanout in enumerate(fanouts):
-        hint = "broadcast" if frontier.count() < 0.05 * nv else "shuffle_hash"
+        seeds = spark.createDataFrame([(int(s),) for s in seeds], "dst LONG")
+    init = seeds.distinct().select(F.lit(-1).alias("hop"),
+                                   F.lit(None).cast("long").alias("src"),
+                                   "dst", F.lit(True).alias("chg"))
+
+    def step(state: DataFrame, s: int) -> DataFrame:
+        hop = s - 1
         if hash_fn == "fast":
             h = F.xxhash64(F.lit(seed), F.lit(hop), F.col("src"), F.col("dst"))
         else:
             h = _portable_rank_hash(seed, hop)
+        frontier = state.filter(F.col("chg")).select(
+            F.col("dst").alias("src")).distinct()
         sampled = (
-            edges.join(frontier.hint(hint), "src")
+            edges.join(frontier, "src")
             .withColumn("_rk", F.row_number().over(
                 Window.partitionBy("src").orderBy(h.asc(), F.col("dst").asc())))
-            .filter(F.col("_rk") <= fanout)
-            .select(F.lit(hop).alias("hop"), "src", "dst")
+            .filter(F.col("_rk") <= fanouts[hop])
+            .select(F.lit(hop).alias("hop"), "src", "dst", F.lit(True).alias("chg"))
         )
-        sampled = t(sampled, "sampled")
-        piece = sampled
-        out = piece if out is None else out.unionByName(piece)
-        out = t(out, "out")
-        frontier = t(sampled.select(F.col("dst").alias("src")).distinct(),
-                     "frontier")
-    t.free("sampled")
-    t.free("frontier")
-    return out if out is not None else spark.createDataFrame(
-        [], "hop INT, src LONG, dst LONG")
+        return state.withColumn("chg", F.lit(False)).unionByName(sampled)
+
+    state, _ = SuperstepRunner(spark).run(
+        FixpointJob("neighbor_sample", init, step), max_steps=len(fanouts))
+    return state.filter(F.col("hop") >= 0).select("hop", "src", "dst")

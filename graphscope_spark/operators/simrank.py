@@ -26,9 +26,9 @@ co-reachable pairs, so the scale path is the standard truncated SimRank:
 ``min_score`` prunes pairs whose score falls under the threshold before
 they fan out (the pruned mass is bounded by C·min_score per round, the
 usual truncation argument), and hub vertices (huge |I(v)|) damp
-themselves through the 1/(d_a·d_b) factor.  Each round is truncated by
-the stats-resetting ``Truncator`` of runtime/superstep.py, identical to
-the other driver-loop operators.
+themselves through the 1/(d_a·d_b) factor.  The rounds are a
+fixed-depth ``FixpointJob`` on ``SuperstepRunner`` (runtime/superstep.py),
+which truncates the pair state every round like every other loop.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import LinkGraph
-from graphscope_spark.runtime.superstep import Truncator
+from graphscope_spark.runtime.superstep import FixpointJob, SuperstepRunner
 
 __all__ = ["simrank"]
 
@@ -60,12 +60,14 @@ def simrank(graph: LinkGraph, c: float = 0.8, iterations: int = 3,
         .persist(StorageLevel.MEMORY_AND_DISK)
     indeg = edges.groupBy(F.col("dst").alias("vid")) \
         .agg(F.count("*").alias("deg"))
-    t = Truncator()
-    # sparse state: the diagonal (score 1) — off-diagonal zeros implicit
-    state = t(graph.vertices.select(
+    # sparse state: the diagonal (score 1) — off-diagonal zeros implicit;
+    # every row is rewritten each round (chg), so the job runs
+    # ``iterations`` steps
+    diag = graph.vertices.select(
         F.col("vid").alias("u"), F.col("vid").alias("v"),
-        F.lit(1.0).alias("score")), "state")
-    for _ in range(iterations):
+        F.lit(1.0).alias("score"), F.lit(True).alias("chg"))
+
+    def step(state: DataFrame, _s: int) -> DataFrame:
         prod = (
             state
             .join(edges.select(F.col("src").alias("u"),
@@ -80,13 +82,13 @@ def simrank(graph: LinkGraph, c: float = 0.8, iterations: int = 3,
                                F.col("deg").alias("db")), "b")
             .select(F.col("a").alias("u"), F.col("b").alias("v"),
                     (F.lit(c) / (F.col("da") * F.col("db"))
-                     * F.col("ssum")).alias("score"))
+                     * F.col("ssum")).alias("score"), F.lit(True).alias("chg"))
         )
         if min_score > 0.0:
             prod = prod.filter(F.col("score") >= min_score)
-        state = t(graph.vertices.select(
-            F.col("vid").alias("u"), F.col("vid").alias("v"),
-            F.lit(1.0).alias("score")).unionByName(prod), "state")
-    out = state.filter(F.col("u") != F.col("v"))
+        return diag.unionByName(prod)
+
+    state, _ = SuperstepRunner(graph.spark).run(
+        FixpointJob("simrank", diag, step), max_steps=iterations)
     edges.unpersist()
-    return out
+    return state.filter(F.col("u") != F.col("v")).select("u", "v", "score")

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from graphscope_spark.graph import LinkGraph
 from graphscope_spark.runtime.superstep import (BROADCAST_CAP_ROWS,
-                                                SuperstepJob, SuperstepRunner)
+                                                FixpointJob, SuperstepJob,
+                                                SuperstepRunner)
 
 _INF = float("inf")
 
@@ -383,7 +384,9 @@ def path_expand(graph: LinkGraph, sources: list[int], min_hops: int = 1,
     from the source lies in [min_hops, max_hops] (GIE's default
     shortest-distance expansion; one msbfs, all sources batched).
     ``mode="path"``: (path array<long>) — simple paths of length in the
-    range, breadth-batched like ``all_simple_paths``.
+    range, breadth-batched like ``all_simple_paths``: a growing-frontier
+    ``FixpointJob`` whose state is every path found so far, and each hop
+    extends the paths the previous hop added.
     """
     if mode == "vertex":
         runner = SuperstepRunner(graph.spark)
@@ -395,29 +398,22 @@ def path_expand(graph: LinkGraph, sources: list[int], min_hops: int = 1,
     if mode != "path":
         raise ValueError("mode must be 'vertex' or 'path'")
     spark = graph.spark
-    from graphscope_spark.runtime.superstep import Truncator
-    t = Truncator()
     edges = graph.edges.select("src", "dst").distinct()
-    frontier = t(spark.createDataFrame(
-        [([int(s)], int(s)) for s in sources], "path ARRAY<BIGINT>, cur LONG"),
-        "frontier")
-    out = None
-    for hop in range(1, max_hops + 1):
-        expanded = t(
-            frontier.join(edges, frontier["cur"] == edges["src"])
+
+    def step(state: DataFrame, _hop: int) -> DataFrame:
+        grown = (
+            state.filter(F.col("chg")).join(edges, F.col("cur") == F.col("src"))
             .filter(~F.array_contains("path", F.col("dst")))
             .select(F.concat("path", F.array("dst")).alias("path"),
-                    F.col("dst").alias("cur")),
-            "frontier")
-        if hop >= min_hops:
-            piece = expanded.select("path")
-            out = piece if out is None else out.unionByName(piece)
-            out = t(out, "out")
-        frontier = expanded
-        if frontier.isEmpty():
-            break
-    return out if out is not None else spark.createDataFrame(
-        [], "path ARRAY<BIGINT>")
+                    F.col("dst").alias("cur"), F.lit(True).alias("chg")))
+        return state.withColumn("chg", F.lit(False)).unionByName(grown)
+
+    state, _ = SuperstepRunner(spark).run(FixpointJob(
+        "path_expand", spark.createDataFrame(
+            [([int(s)], int(s), True) for s in sources],
+            "path ARRAY<BIGINT>, cur LONG, chg BOOLEAN"), step),
+        max_steps=max_hops)
+    return state.filter(F.size("path") - 1 >= max(min_hops, 1)).select("path")
 
 
 def diameter_approx(graph: LinkGraph, num_pivots: int = 16,

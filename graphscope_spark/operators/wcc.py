@@ -144,8 +144,7 @@ def hashmin(msg_edges: DataFrame, labels: DataFrame) -> DataFrame:
 
     ``labels`` is materialized and counted once (the count scales the
     sparse/dense gate). The result is a ``truncate`` result: the caller
-    frees it with ``free_truncated`` once consumed, and must not hand it
-    to a ``Truncator`` slot."""
+    frees it with ``free_truncated`` once consumed."""
     labels = truncate(labels.select("vid", "comp"))
     try:
         job = HashMinJob(msg_edges, labels, labels.count())

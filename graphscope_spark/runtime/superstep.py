@@ -21,7 +21,11 @@ grape_instance.cc:302-306). The manifest and the ``LATEST`` pointer are
 replaced atomically (temp file + ``os.replace``), so a crash mid-write
 leaves the previous checkpoint resumable.
 
-Both loop styles truncate through one primitive, ``truncate``: an eager
+There is one loop style: every iterative operator runs its supersteps on
+``SuperstepRunner``, most as a ``FixpointJob``. A driver loop whose
+rounds each run runner jobs (scc's peel passes, msf's Borůvka rounds,
+Louvain's levels) is a plain Python loop that holds its per-round frames
+with the same primitive the runner uses, ``truncate``: an eager
 ``localCheckpoint`` whose block RDD is read off the checkpointed plan (a
 ``LogicalRDD``) and freed by ``free_truncated`` once superseded, since
 ``DataFrame.unpersist()`` never frees localCheckpoint blocks. The
@@ -153,34 +157,6 @@ def free_truncated(df: DataFrame | None) -> None:
     if blocks is not None:
         blocks.unpersist(False)
         df._gs_blocks = None
-
-
-class Truncator:
-    """Per-slot ``truncate`` for driver loops.
-
-    ``t(df, slot)`` truncates ``df`` (materializing it, which may read
-    the slot's previous checkpoint) and THEN frees the slot's previous
-    checkpoint, so a loop keeps at most one live state per slot. Call
-    ``close()`` once the final results have been consumed (or copied out
-    by a further ``truncate``)."""
-
-    def __init__(self):
-        self._live: dict[str, DataFrame] = {}
-
-    def __call__(self, df: DataFrame, slot: str = "state") -> DataFrame:
-        out = truncate(df)
-        free_truncated(self._live.get(slot))
-        self._live[slot] = out
-        return out
-
-    def free(self, slot: str) -> None:
-        """Free a slot's live checkpoint now (data provably dead)."""
-        free_truncated(self._live.pop(slot, None))
-
-    def close(self) -> None:
-        for df in self._live.values():
-            free_truncated(df)
-        self._live.clear()
 
 
 def _replace_file(path: str, text: str) -> None:

@@ -4,6 +4,11 @@ The defaults mirror what we would submit on a real multi-executor cluster
 (``spark-submit --py-files graphscope_spark.zip``): AQE on (runtime
 broadcast-conversion + skew-join splitting), Arrow on (pandas UDF batches),
 explicit shuffle-partition count sized to the parallelism level.
+The package's parent directory goes on the Python workers' ``PYTHONPATH``
+(``spark.executorEnv.PYTHONPATH``), the local counterpart of
+``--py-files``: a driver that imports the package from a ``sys.path``
+entry, with any working directory, runs its Python UDFs on workers that
+can import it too.
 """
 
 from __future__ import annotations
@@ -11,6 +16,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_mem() -> str:
@@ -67,6 +74,7 @@ def build_session(
                 os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

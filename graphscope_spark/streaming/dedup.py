@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphscope_spark.functions.dedup import _minhash_sigs, band_key
+from graphscope_spark.runtime.superstep import (FixpointJob, SuperstepRunner,
+                                                free_truncated, truncate)
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
@@ -149,8 +151,6 @@ class IncrementalMinHashDedup:
         # decides each doc once all its smaller candidate neighbors are
         # decided: admit iff no smaller ADMITTED neighbor and not
         # dropped by the state in (2). Rounds = similarity-chain depth.
-        from graphscope_spark.runtime.superstep import Truncator
-
         sizes = (bkts.groupBy("band", "key")
                  .agg(F.count(F.lit(1)).alias("_n"))
                  .filter(F.col("_n") <= self.max_bucket)
@@ -168,37 +168,34 @@ class IncrementalMinHashDedup:
                     >= self.sim_threshold)
             .select("a", "b")
         )
-        t = Truncator()
-        try:
-            pairs = t(pairs, "pairs")
-            decided = t(hit_state.select(
-                "id", F.lit(False).alias("admit")), "dec")
-            undecided = t(docs.select("id")
-                          .join(decided.select("id"), "id", "left_anti"),
-                          "und")
-            while not undecided.isEmpty():
-                nb = pairs.join(undecided.select(F.col("id").alias("b")),
-                                "b")
-                st = nb.join(decided.select(F.col("id").alias("a"),
-                                            "admit"), "a", "left")
-                per_b = st.groupBy(F.col("b").alias("id")).agg(
+
+        # decision state (id, admit, chg): admit is null while undecided (chg)
+        def step(st: DataFrame, _s: int) -> DataFrame:
+            und = st.filter(F.col("chg")).select("id")
+            per_b = (
+                pairs.join(und.select(F.col("id").alias("b")), "b")
+                .join(st.select(F.col("id").alias("a"), "admit"), "a", "left")
+                .groupBy(F.col("b").alias("id")).agg(
                     F.max(F.col("admit").cast("int")).alias("_any_admit"),
                     F.sum(F.col("admit").isNull().cast("int"))
-                    .alias("_n_open"))
-                # ready gets its own slot: it reads the CURRENT decided
-                # checkpoint, which the "dec" slot reuse below frees —
-                # materialize it first or the und update re-evaluates a
-                # plan over reclaimed blocks
-                ready = t((undecided.join(per_b, "id", "left")
-                           .filter(F.coalesce(F.col("_n_open"),
-                                              F.lit(0)) == 0)
-                           .select("id", (F.coalesce(F.col("_any_admit"),
-                                                     F.lit(0)) == 0)
-                                   .alias("admit"))), "ready")
-                decided = t(decided.unionByName(ready), "dec")
-                undecided = t(undecided.join(ready.select("id"), "id",
-                                             "left_anti"), "und")
-            kept = decided.filter(F.col("admit")).select("id")
+                    .alias("_n_open")))
+            ready = (und.join(per_b, "id", "left")
+                     .filter(F.coalesce(F.col("_n_open"), F.lit(0)) == 0)
+                     .select("id", (F.coalesce(F.col("_any_admit"), F.lit(0))
+                                    == 0).alias("_ready")))
+            admit = F.coalesce(F.col("admit"), F.col("_ready"))
+            return st.join(ready, "id", "left").select(
+                "id", admit.alias("admit"), admit.isNull().alias("chg"))
+
+        init = docs.select("id").distinct() \
+            .join(hit_state.withColumn("admit", F.lit(False)), "id", "left") \
+            .withColumn("chg", F.col("admit").isNull())
+        dec = None
+        try:
+            pairs = truncate(pairs)  # every step reads it
+            dec, _ = SuperstepRunner(self.spark).run(
+                FixpointJob("minhash_dedup_admit", init, step))
+            kept = dec.filter(F.col("admit")).select("id")
 
             # (4) survivors claim their unowned buckets, min id wins
             new_bkts = (
@@ -218,13 +215,14 @@ class IncrementalMinHashDedup:
             # long the stream has run. kept first: its plan reads the
             # pre-append state. A foreachBatch replay re-appends
             # identical kept rows (see kept()'s distinct-on-read
-            # guard). Both writes run INSIDE the Truncator lifetime —
-            # kept's plan reads the loop's checkpoint blocks.
+            # guard). Both writes run before the finally frees the
+            # fixpoint's blocks: kept's plan reads them.
             kept.select(F.col("id").alias("doc_id")) \
                 .write.mode("append").parquet(self._kept)
             new_bkts.write.mode("append").parquet(self._live)
         finally:
-            t.close()
+            free_truncated(pairs)
+            free_truncated(dec)
             bkts.unpersist()
 
     # ---- streaming entry --------------------------------------------------

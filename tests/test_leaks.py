@@ -1,6 +1,7 @@
-"""Checkpoint-block reclamation: driver-loop algorithms must not
-accumulate localCheckpoint block RDDs (ADVICE round 1: unpersist() never
-frees them; Truncator frees superseded slots deterministically)."""
+"""Checkpoint-block reclamation: loop algorithms must not accumulate
+localCheckpoint block RDDs (unpersist() never frees them; the superstep
+runner frees each superseded state, and driver loops over runner jobs
+free their per-round frames with ``free_truncated``)."""
 
 from __future__ import annotations
 
@@ -51,6 +52,14 @@ def _mk(spark, n=60, m=240, seed=8):
         num_partitions=2)
 
 
+# loops that were hand-written driver loops until they moved onto the
+# runner: each must show its steps as runner jobs
+_MOVED_TO_RUNNER = {"scc", "voterank", "neighbor_sample", "simrank",
+                    "lpa_u2i", "sampling_path", "path_expand_path",
+                    "node2vec_walks", "min_vertex_cover",
+                    "min_dominating_set", "minimum_spanning_forest"}
+
+
 @pytest.mark.parametrize("algo", ["scc", "louvain", "betweenness",
                                   "core_numbers", "voterank", "mis",
                                   "ktruss", "bcc", "color",
@@ -58,10 +67,25 @@ def _mk(spark, n=60, m=240, seed=8):
                                   "onion_layers", "maximal_matching",
                                   "kcore", "truss_number_max",
                                   "articulation_points", "edge_betweenness",
-                                  "neighbor_sample"])
-def test_loop_algorithms_release_checkpoints(spark, algo):
-    import graphscope_spark as gs
+                                  "neighbor_sample", "simrank", "lpa_u2i",
+                                  "sampling_path", "path_expand_path",
+                                  "node2vec_walks", "min_vertex_cover",
+                                  "min_dominating_set",
+                                  "minimum_spanning_forest"])
+def test_loop_algorithms_release_checkpoints(spark, algo, monkeypatch):
+    from pyspark.sql import functions as F
 
+    import graphscope_spark as gs
+    from graphscope_spark.runtime.superstep import SuperstepRunner
+
+    jobs = []
+    real_run = SuperstepRunner.run
+
+    def recording_run(self, job, *args, **kwargs):
+        jobs.append(job.name)
+        return real_run(self, job, *args, **kwargs)
+
+    monkeypatch.setattr(SuperstepRunner, "run", recording_run)
     g = _mk(spark)
     before = _persistent_count(spark)
     if algo == "scc":
@@ -103,6 +127,25 @@ def test_loop_algorithms_release_checkpoints(spark, algo):
         gs.edge_betweenness_centrality(g, sources="all").count()
     elif algo == "neighbor_sample":
         gs.neighbor_sample(g, [0, 1, 2], fanouts=(3, 2)).count()
+    elif algo == "simrank":
+        gs.simrank(g, iterations=2).count()
+    elif algo == "lpa_u2i":
+        u = g.vertices.select("vid", (F.col("vid") % 3 == 0)
+                              .cast("double").alias("p0"))
+        gs.lpa_u2i(spark, u, g.edges.withColumn("weight", F.lit(1.0)),
+                   ["p0"], max_round=5).count()
+    elif algo == "sampling_path":
+        gs.sampling_path(g, num_paths=10, length=3).count()
+    elif algo == "path_expand_path":
+        gs.path_expand(g, [0, 1], min_hops=1, max_hops=2, mode="path").count()
+    elif algo == "node2vec_walks":
+        gs.node2vec_walks(g, length=3).count()
+    elif algo == "min_vertex_cover":
+        gs.min_vertex_cover(g).count()
+    elif algo == "min_dominating_set":
+        gs.min_dominating_set(g).count()
+    elif algo == "minimum_spanning_forest":
+        gs.minimum_spanning_forest(g).count()
     after = _persistent_count(spark)
     # a loop of k iterations used to leak ~k block sets; now at most a
     # handful of live result/graph-cache entries may remain
@@ -112,6 +155,8 @@ def test_loop_algorithms_release_checkpoints(spark, algo):
     # graph cache the call happened to materialize first
     freed = _freed_graph_caches(spark, g)
     assert not freed, f"{algo} unpersisted graph caches {freed}"
+    # every iterative operator's steps appear in runner history
+    assert jobs or algo not in _MOVED_TO_RUNNER, f"{algo} ran no runner job"
     g.unpersist_all()
 
 
@@ -135,6 +180,33 @@ def test_incremental_wcc_releases_blocks_per_batch(spark, tmp_path):
     # drop unrelated GC'd RDDs mid-test; only an increase is a leak
     assert after_second <= after_first, (
         f"IncrementalWCC leaked {after_second - after_first} RDD(s) per batch")
+
+
+def test_incremental_minhash_dedup_releases_blocks_per_batch(spark, tmp_path):
+    """Each process_batch frees its admission fixpoint's blocks (and its
+    candidate-pair checkpoint) once the batch is written: a second batch
+    leaves no more persistent RDDs than the first did."""
+    from graphscope_spark.streaming import IncrementalMinHashDedup
+
+    base = ("the quick brown fox jumps over the lazy dog again and again "
+            "while the river runs east past the old mill and the stone "
+            "bridge every single morning")
+    other = ("completely different content about distributed query "
+             "engines shuffle partitioning and adaptive execution plans")
+    inc = IncrementalMinHashDedup(spark, str(tmp_path / "state"),
+                                  sim_threshold=0.7)
+    inc.process_batch(spark.createDataFrame(
+        [(1, base), (2, other), (3, base)], "doc_id LONG, text STRING"))
+    after_first = _persistent_count(spark)
+    inc.process_batch(spark.createDataFrame(
+        [(4, base.replace("morning", "evening")), (5, "a tiny fresh doc"),
+         (6, "a tiny fresh doc")], "doc_id LONG, text STRING"))
+    after_second = _persistent_count(spark)
+    assert {r["doc_id"] for r in inc.kept().collect()} == {1, 2, 5}
+    # one-sided, as in test_incremental_wcc_releases_blocks_per_batch
+    assert after_second <= after_first, (
+        f"IncrementalMinHashDedup leaked {after_second - after_first} "
+        f"RDD(s) per batch")
 
 
 def test_pattern_match_directed_releases_edges(spark):

@@ -402,15 +402,29 @@ def test_cypher_multi_match_plans_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_simrank_round_no_cartesian_no_state_broadcast(spark):
+def test_simrank_round_no_cartesian_no_state_broadcast(spark, monkeypatch):
     """A SimRank round is pair-state x two edge hash-joins + one
     aggregate. The pair state grows toward the co-reachable closure, so
     it must NEVER broadcast; a cartesian anywhere would defeat the
-    sparse-pair formulation."""
+    sparse-pair formulation. The plan checked is the second round's raw
+    step plan, as the runner hands it to ``truncate`` (the result is a
+    scan of the last checkpoint and shows no round at all)."""
     from graphscope_spark.operators.simrank import simrank
+    from graphscope_spark.runtime import superstep
 
+    plans = []
+    real_truncate = superstep.truncate
+
+    def recording_truncate(df):
+        plans.append(_formatted(df))
+        return real_truncate(df)
+
+    monkeypatch.setattr(superstep, "truncate", recording_truncate)
     g = _mk(spark, n=300, m=900, seed=7)
-    plan = _formatted(simrank(g, iterations=2))
+    simrank(g, iterations=2).count()
+    assert len(plans) == 3  # the init state, then one raw plan per round
+    plan = plans[-1]
+    assert "HashAggregate" in plan and "Join" in plan, plan[:2000]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
