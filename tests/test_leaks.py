@@ -52,14 +52,6 @@ def _mk(spark, n=60, m=240, seed=8):
         num_partitions=2)
 
 
-# loops that were hand-written driver loops until they moved onto the
-# runner: each must show its steps as runner jobs
-_MOVED_TO_RUNNER = {"scc", "voterank", "neighbor_sample", "simrank",
-                    "lpa_u2i", "sampling_path", "path_expand_path",
-                    "node2vec_walks", "min_vertex_cover",
-                    "min_dominating_set", "minimum_spanning_forest"}
-
-
 @pytest.mark.parametrize("algo", ["scc", "louvain", "betweenness",
                                   "core_numbers", "voterank", "mis",
                                   "ktruss", "bcc", "color",
@@ -156,7 +148,7 @@ def test_loop_algorithms_release_checkpoints(spark, algo, monkeypatch):
     freed = _freed_graph_caches(spark, g)
     assert not freed, f"{algo} unpersisted graph caches {freed}"
     # every iterative operator's steps appear in runner history
-    assert jobs or algo not in _MOVED_TO_RUNNER, f"{algo} ran no runner job"
+    assert jobs, f"{algo} ran no runner job"
     g.unpersist_all()
 
 
